@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from storm_spark.session import bounded_persist
+from storm_spark.state.generations import GenerationStore
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -309,7 +310,7 @@ def kmeans_centroids(
     drives both), deterministic and SQL-expressible, which keeps the
     exact-oracle story: the oracle reproduces the sample as one
     ``ORDER BY md5(CAST(id AS VARCHAR)), id LIMIT N`` CTE. ``None``
-    trains on the full corpus (the pre-r12 behavior).
+    trains on the full corpus.
     """
     c = corpus.select(
         F.col(id_col).alias("__id__"), F.col(vec_col).cast("array<double>").alias("__cv__")
@@ -1160,7 +1161,7 @@ def pq_codebooks(
     vectors). Same seedless md5 total order as the init (init ⊂ sample
     by construction), deterministic and SQL-expressible so the exact
     oracle reproduces it as one ``ORDER BY md5(...) LIMIT N`` CTE.
-    ``None`` trains on the full corpus (the pre-r12 behavior).
+    ``None`` trains on the full corpus.
     """
     spark = corpus.sparkSession
     v = corpus.select(
@@ -1629,14 +1630,18 @@ def _ivf_pq_search(
 
 class IVFPQIndex:
     """Persisted IVF-PQ ANN index — the train-once / probe-many SERVING
-    shape for a real 100-TB corpus (VERDICT r9 stretch #9): every prior
-    ANN path retrains centroids and codebooks per call, which is the
-    right shape for a gate and the wrong one for production, where the
-    index is built once and probed by every downstream job.
+    shape for a real 100-TB corpus: every other ANN path retrains
+    centroids and codebooks per call, which is the right shape for a
+    gate and the wrong one for production, where the index is built once
+    and probed by every downstream job.
 
-    :meth:`build` trains the coarse quantizer + PQ codebooks, assigns and
-    encodes the corpus, and writes four parquet artifacts plus a
-    ``_ann_meta.json`` sidecar under ``path``:
+    The index lives in a
+    :class:`~storm_spark.state.generations.GenerationStore` rooted at
+    ``path`` (the layout and its durability argument are stated there,
+    once). :meth:`build` trains the coarse quantizer + PQ codebooks,
+    assigns and encodes the corpus, writes generation 0 and flips the
+    pointer to it; the pointer records ``_META_KEYS``. A generation
+    holds:
 
     - ``centroids/`` — (cent_id, __cent__), broadcast-tiny
     - ``codebooks/`` — (sub, cent_id, __cent__), broadcast-tiny
@@ -1646,21 +1651,20 @@ class IVFPQIndex:
       full code table
     - ``vectors/`` — (neighbor_id, __cv__) for the exact shortlist
       re-rank
-    - ``ids/`` — (neighbor_id) PARTITIONED BY a hash bucket, the
-      compact sidecar the exactly-once checks scan with partition
-      pruning — O(|Δ| + index/id_buckets) per absorb instead of an
-      index-wide id column scan (r11, VERDICT r10 #3; the LSH index's
-      ``__ids`` pattern)
-    - ``tombstones/`` — (neighbor_id,) deleted ids awaiting
-      :meth:`compact` (absent until the first :meth:`remove_vectors`)
+    - ``ids/`` — the shared ids sidecar the exactly-once checks scan with
+      partition pruning — O(|Δ| + index/id_buckets) per absorb
+    - ``tombstones/`` — deleted ids awaiting :meth:`compact` (absent until
+      the first :meth:`remove_vectors`)
 
-    :meth:`load` re-attaches in a fresh driver/session (the restart
-    story, mirroring ``IncrementalLSHIndex(resume=True)``), validating
-    the sidecar exists. :meth:`search` runs the identical query side as
-    :func:`ivf_pq_topk` (shared :func:`_ivf_pq_search`, shared probe
-    shape, shared tie-breaks) — a persisted index answers bit-identically
-    to the in-flight composition, which the ``ann_index_persist`` gate
-    pins against the same DuckDB oracle as ``ann_ivf_pq``.
+    :meth:`compact` and :meth:`retrain` write the next generation and
+    flip; :meth:`add_vectors` and :meth:`remove_vectors` append to the
+    serving one. :meth:`load` re-attaches through the pointer in a fresh
+    driver/session (mirroring ``IncrementalLSHIndex(resume=True)``).
+    :meth:`search` runs the identical query side as :func:`ivf_pq_topk`
+    (shared :func:`_ivf_pq_search`, shared probe shape, shared
+    tie-breaks) — a persisted index answers bit-identically to the
+    in-flight composition, which the ``ann_index_persist`` gate pins
+    against the same DuckDB oracle as ``ann_ivf_pq``.
 
     Reference parity: Trident's persistent ``State`` split between a
     preparing (build) and a querying (stateQuery) topology —
@@ -1670,21 +1674,8 @@ class IVFPQIndex:
 
     _META_KEYS = (
         "m", "ksub", "n_lists", "sub_len", "id_col", "vec_col",
-        "id_buckets", "generation", "train_sample",
+        "id_buckets", "train_sample",
     )
-
-    @staticmethod
-    def _auto_id_buckets(n_rows: int) -> int:
-        """Scale-adaptive ids/ partition count (~100k ids per bucket,
-        power of two, clamped to [8, 4096]) — shared rule with
-        ``IncrementalLSHIndex._auto_id_buckets``."""
-        import math as _math
-
-        if n_rows <= 0:
-            return 8
-        return max(
-            8, min(4096, 1 << _math.ceil(_math.log2(max(1.0, n_rows / 100_000))))
-        )
 
     def __init__(
         self,
@@ -1694,50 +1685,45 @@ class IVFPQIndex:
         auto_compact_every: int | None = None,
     ):
         self.path = path
+        self._store = GenerationStore(path)
         self.id_col, self.vec_col = id_col, vec_col
         self.m = self.ksub = self.n_lists = self.sub_len = None
         if auto_compact_every is not None and auto_compact_every < 1:
             raise ValueError("auto_compact_every must be >= 1")
-        # TABLE-compaction cadence (r13, VERDICT r12 #6 — the
-        # IncrementalLSHIndex twin): every K-th add_vectors triggers the
-        # generation-swap compact() after the absorb, bounding the
-        # deltas × cells small-file accretion of a months-long feed.
-        # A RUNTIME policy, not index structure: it is not persisted in
-        # the meta — a load()-ed incarnation sets the attribute (or the
-        # constructor arg) itself; the counter restarts per incarnation.
+        # every auto_compact_every-th add_vectors runs compact() after the
+        # absorb. A RUNTIME policy, not index structure: not recorded in
+        # the pointer; the counter restarts per incarnation.
         self.auto_compact_every = auto_compact_every
         self._absorbs_since_compact = 0
-        # hash-partition count of the ids/ sidecar (delta-sized
-        # exactly-once checks, VERDICT r10 #3); None on a loaded
-        # pre-sidecar index, which falls back to the vectors scan.
-        # "auto" (r13 optimization round, guide §2): resolved from the
-        # built corpus size at the first ids/ write (~100k ids/bucket,
-        # [8, 4096]) — the constant 64 paid a fixed 64-directory
-        # partition commit per absorb at any scale and under-partitions
-        # a billion-id corpus; the resolved value persists in the meta
-        self.id_buckets: int | str | None = "auto"
-        # generation subdirectory (r11 retrain lifecycle): None = the
-        # legacy root layout (artifacts directly under path); "gN" after
-        # a retrain(). The meta sidecar is the POINTER — readers resolve
-        # every artifact through it, so the retrain swap is one atomic
-        # os.replace of the meta file.
-        self.generation: str | None = None
-        # codebook-training sample bound (r12, VERDICT r11 #2) — recorded
-        # in the meta so retrain()'s default reproduces the build's choice
+        # ids-sidecar partition count, resolved from the built corpus
+        self.id_buckets: int | str = "auto"
+        # codebook-training sample bound, recorded so retrain()'s default
+        # reproduces the build's choice
         self.train_sample: int | None = None
 
-    def _meta_file(self) -> str:
-        import os as _os
+    @property
+    def generation(self) -> int | None:
+        """Serving generation; None before :meth:`build`."""
+        return self._store.generation
 
-        return _os.path.join(self.path, "_ann_meta.json")
+    def _meta(self) -> dict:
+        return {k: getattr(self, k) for k in self._META_KEYS}
 
-    def _art(self, name: str) -> str:
-        """Path of artifact ``name`` in the CURRENT generation."""
-        import os as _os
-
-        if self.generation:
-            return _os.path.join(self.path, self.generation, name)
-        return _os.path.join(self.path, name)
+    def _check_codebooks(self, cbs: DataFrame, m: int, ksub: int, verb: str) -> None:
+        """Pre-trained codebooks must describe the SAME (m, ksub) the
+        pointer will record — a mismatch would slice the wrong subspaces
+        and record metadata that misdescribes the index."""
+        shape = cbs.agg(
+            F.max("sub").alias("s"),
+            F.max("cent_id").alias("c"),
+            F.count(F.lit(1)).alias("n"),
+        ).first()
+        subs, k, rows = int(shape["s"]) + 1, int(shape["c"]) + 1, int(shape["n"])
+        if subs != m or k != ksub or rows != m * ksub:
+            raise ValueError(
+                f"codebooks shape (subs={subs}, ksub={k}, rows={rows}) does "
+                f"not match {verb}(m={m}, ksub={ksub})"
+            )
 
     def build(
         self,
@@ -1751,29 +1737,18 @@ class IVFPQIndex:
         overwrite: bool = False,
         train_sample: int | None = None,
     ) -> "IVFPQIndex":
-        """Train + encode + persist. ``centroids=None`` uses the
-        smallest-id default (SQL-expressible, what the oracle gates
+        """Train + encode + persist generation 0. ``centroids=None`` uses
+        the smallest-id default (SQL-expressible, what the oracle gates
         need); pass :func:`kmeans_centroids` output for trained cells,
         and/or pre-trained ``codebooks`` (e.g. trained on a larger corpus
         than the initial build — the :meth:`add_vectors` composition).
         ``train_sample`` bounds the codebook Lloyd passes to the
         smallest-``md5(id)`` sample (see :func:`pq_codebooks`; the FAISS
         convention — at 10⁹ vectors full-corpus training dominates the
-        build); recorded in the meta so :meth:`retrain` reproduces the
+        build); recorded in the pointer so :meth:`retrain` reproduces the
         choice by default. Refuses a non-empty ``path`` unless
-        ``overwrite=True`` (same guard as the LSH index — rmtree is
-        unrecoverable)."""
-        import json as _json
-        import os as _os
-        import shutil as _shutil
-
-        if not overwrite and _os.path.isdir(self.path) and _os.listdir(self.path):
-            raise ValueError(
-                f"index path {self.path!r} exists and is non-empty; pass "
-                "overwrite=True to replace it"
-            )
-        _shutil.rmtree(self.path, ignore_errors=True)
-        self.train_sample = train_sample
+        ``overwrite=True`` (the store's fresh-start guard)."""
+        self._store.fresh_start(overwrite, "overwrite")
         cbs = (
             codebooks
             if codebooks is not None
@@ -1783,65 +1758,51 @@ class IVFPQIndex:
             )
         )
         if codebooks is not None:
-            # pre-trained codebooks must describe the SAME (m, ksub) being
-            # persisted to the sidecar — a mismatch would slice the wrong
-            # subspaces and record metadata that misdescribes the index
-            # (r10 self review; the LSH resume path refuses the analogous
-            # parameter drift)
-            shape = cbs.agg(
-                F.max("sub").alias("s"),
-                F.max("cent_id").alias("c"),
-                F.count(F.lit(1)).alias("n"),
-            ).first()
-            if int(shape["s"]) + 1 != m or int(shape["c"]) + 1 != ksub or int(
-                shape["n"]
-            ) != m * ksub:
-                raise ValueError(
-                    f"codebooks shape (subs={int(shape['s']) + 1}, "
-                    f"ksub={int(shape['c']) + 1}, rows={int(shape['n'])}) does "
-                    f"not match build(m={m}, ksub={ksub})"
-                )
+            self._check_codebooks(cbs, m, ksub, "build")
         cents = (
             centroids
             if centroids is not None
             else _ivf_default_centroids(corpus, self.id_col, self.vec_col, n_lists)
         )
-        sub_len = int(cbs.agg(F.max(F.size("__cent__")).alias("L")).first()["L"])
-        self.m, self.ksub, self.n_lists, self.sub_len = m, ksub, n_lists, sub_len
-        _os.makedirs(self.path, exist_ok=True)
-        # the tiny quantizer writes are independent of the encode pass —
-        # overlap them with it (guide §2.6, r14); every artifact lands in
-        # an UNREFERENCED location until the meta sidecar below exists, so
-        # a crash/failure anywhere simply orphans the whole write
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        with _TPE(max_workers=2) as _pool:
-            _fc = _pool.submit(
-                lambda: cents.write.mode("overwrite").parquet(
-                    self._art("centroids")
-                )
-            )
-            _fb = _pool.submit(
-                lambda: cbs.write.mode("overwrite").parquet(
-                    self._art("codebooks")
-                )
-            )
-            self._encode_and_write(corpus, cents, cbs, "overwrite")
-            _fc.result()
-            _fb.result()
-        with open(self._meta_file(), "w") as fh:
-            _json.dump({k: getattr(self, k) for k in self._META_KEYS}, fh)
+        self._write_generation(
+            corpus, cents, cbs,
+            dict(m=m, ksub=ksub, n_lists=n_lists, train_sample=train_sample),
+        )
         return self
+
+    def _write_generation(
+        self, corpus: DataFrame, cents: DataFrame, cbs: DataFrame, params: dict
+    ) -> None:
+        """Quantizers + encoded ``corpus`` into the next generation, then
+        the pointer flip (the shared step of :meth:`build` and
+        :meth:`retrain`). The tiny quantizer writes overlap the encode
+        pass — nothing references the generation until the flip."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        gen = self._store.next_generation()
+        sub_len = int(cbs.agg(F.max(F.size("__cent__")).alias("L")).first()["L"])
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [
+                pool.submit(df.write.mode("overwrite").parquet, self._store.path(name, gen))
+                for name, df in (("centroids", cents), ("codebooks", cbs))
+            ]
+            self._encode_and_write(
+                self._assign_ckpt(corpus, cents), cbs, "overwrite",
+                params["m"], sub_len, gen,
+            )
+            for f in futs:
+                f.result()
+        for k, v in dict(params, sub_len=sub_len).items():
+            setattr(self, k, v)
+        self._store.flip(gen, self._meta())
 
     def _assign_ckpt(self, corpus: DataFrame, cents: DataFrame) -> DataFrame:
         """corpus → cell assignment via the SHARED assign step (probe side
         unused and never executed — a lazy plan on an empty frame),
-        localCheckpoint'ed because it feeds BOTH writes — unmaterialized,
-        the crossJoin+argmax (the most expensive stage) would run twice.
-        Factored out of :meth:`_encode_and_write` (r14) so
-        :meth:`add_vectors` can run it CONCURRENTLY with its guard probes
-        (guide §2.6) — the checkpoint is side-effect-free, so durability
-        ordering (no write before the guards pass) is untouched."""
+        localCheckpoint'ed because it feeds every write — unmaterialized,
+        the crossJoin+argmax (the most expensive stage) would run once per
+        write. Side-effect-free, so :meth:`add_vectors` runs it
+        concurrently with its guard probes."""
         assigned, _ = _ivf_assign_probe(
             corpus, corpus.limit(0), cents, self.id_col, self.vec_col, 1
         )
@@ -1849,131 +1810,72 @@ class IVFPQIndex:
 
     def _encode_and_write(
         self,
-        corpus: DataFrame,
-        cents: DataFrame,
+        assigned: DataFrame,
         cbs: DataFrame,
         mode: str,
-        assigned: DataFrame | None = None,
+        m: int,
+        sub_len: int,
+        generation: int | None = None,
     ) -> None:
-        """Shared assign → encode → persist step of :meth:`build`
-        (overwrite) and :meth:`add_vectors` (append) — one body so a
-        tie-break or schema change cannot desync the two (the same
-        argument as :func:`_pq_encode_cells` itself). The corpus → cell
-        assignment comes from :meth:`_assign_ckpt` (computed here unless
-        the caller already materialized it concurrently with its guards).
-        Write order is ids → VECTORS → codes: the appends cannot be
-        atomic, and earlier-listed-first means a crash between any two
-        leaves ids that the duplicate check sees — the interrupted
-        batch's REPLAY raises loudly instead of silently double-scoring
-        (the ids-before-index ordering of ``IncrementalLSHIndex``); an
-        id in vectors without codes is simply absent from the ADC scan,
-        never a wrong answer, and a sidecar id without vectors hides
-        nothing (search never reads ids/; compact rebuilds it)."""
-        import os as _os
-
+        """Shared encode → persist step of :meth:`build`/:meth:`retrain`
+        (overwrite, into a new generation) and :meth:`add_vectors`
+        (append, into the serving one) — one body so a tie-break or
+        schema change cannot desync them. Append order is ids → VECTORS →
+        codes: the appends cannot be atomic, and earlier-listed-first
+        means a crash between any two leaves ids that the duplicate check
+        sees — the interrupted batch's REPLAY raises loudly instead of
+        silently double-scoring (the ids-before-index ordering of
+        ``IncrementalLSHIndex``); an id in vectors without codes is simply
+        absent from the ADC scan, never a wrong answer, and a sidecar id
+        without vectors hides nothing (search never reads ids/;
+        :meth:`compact` rebuilds it)."""
         from concurrent.futures import ThreadPoolExecutor
 
-        if assigned is None:
-            assigned = self._assign_ckpt(corpus, cents)
-        codes = _pq_encode_cells(assigned, cbs, self.m, self.sub_len)
-        if self.id_buckets == "auto":
-            # scale-adaptive sidecar partition count (guide §2), sized
-            # once from the first written batch; assigned is already
-            # checkpointed so the count is a cheap local scan
-            self.id_buckets = self._auto_id_buckets(assigned.count())
+        codes = _pq_encode_cells(assigned, cbs, m, sub_len)
 
         def _write_ids():
-            # compact id sidecar, hash-PARTITIONED so the exactly-once
-            # checks prune to the delta's touched buckets (VERDICT r10
-            # #3 — the LSH index's __ids pattern). In append mode it is
-            # written FIRST (ids-before-vectors-before-codes): a crash
-            # after this write makes the batch's replay raise "already
-            # indexed" (loud), and a dangling sidecar id hides nothing —
-            # search never reads ids/ — while compact() rebuilds it from
-            # vectors.
-            (
-                assigned.select(
-                    "neighbor_id",
-                    F.pmod(
-                        F.xxhash64("neighbor_id"), F.lit(self.id_buckets)
-                    ).alias("__idb__"),
-                )
-                # one task per bucket → one file per touched partition
-                # per write; unrepartitioned, EVERY task writes every
-                # bucket (tasks×buckets small files — measured 1.5× wall
-                # on the ANN index gates). The shuffled payload is a
-                # single bigint column.
-                .repartition("__idb__")
-                .write.mode(mode)
-                .partitionBy("__idb__")
-                .parquet(self._art("ids"))
+            self.id_buckets = self._store.write_ids(
+                assigned.select("neighbor_id"), "neighbor_id", self.id_buckets,
+                mode, generation,
             )
 
         def _write_vectors():
-            (
-                assigned.select("neighbor_id", "__cv__")
-                .write.mode(mode)
-                .parquet(self._art("vectors"))
+            assigned.select("neighbor_id", "__cv__").write.mode(mode).parquet(
+                self._store.path("vectors", generation)
             )
 
         def _write_codes():
-            (
-                codes.write.mode(mode)
-                .partitionBy("__cell__")
-                .parquet(self._art("codes"))
+            codes.write.mode(mode).partitionBy("__cell__").parquet(
+                self._store.path("codes", generation)
             )
 
         if mode == "overwrite":
-            # build/retrain write into an UNREFERENCED location (a fresh
-            # root with the meta written after, or a new generation behind
-            # the pointer) — a crash anywhere orphans the whole write, so
-            # the three independent writes can overlap (guide §2.6: the
+            # an unreferenced generation: the three writes overlap (the
             # scheduler back-fills one write's straggler tail with the
             # next's tasks; all three consume the checkpointed `assigned`)
-            writers = [_write_vectors, _write_codes] + (
-                [_write_ids] if self.id_buckets else []
-            )
-            with ThreadPoolExecutor(max_workers=len(writers)) as pool:
-                for f in [pool.submit(w) for w in writers]:
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                for f in [pool.submit(w) for w in (_write_vectors, _write_codes, _write_ids)]:
                     f.result()
         else:
-            # append (add_vectors): the crash-ordering contract above
-            # requires ids → vectors → codes strictly in sequence
-            if self.id_buckets:
-                _write_ids()
+            _write_ids()
             _write_vectors()
             _write_codes()
 
     @classmethod
     def load(cls, path: str) -> "IVFPQIndex":
-        """Attach to a persisted index — pure metadata (the parquet
-        artifacts are read lazily by :meth:`search` through the queries
-        frame's session, so a fresh driver just calls load(path) and
-        searches). Fails loudly when the sidecar is missing (not an
-        index, or a pre-meta incarnation)."""
-        import json as _json
-        import os as _os
-
-        meta_file = _os.path.join(path, "_ann_meta.json")
-        if not _os.path.isfile(meta_file):
+        """Attach to a persisted index through its pointer — pure metadata
+        (the parquet artifacts are read lazily by :meth:`search` through
+        the queries frame's session, so a fresh driver just calls
+        load(path) and searches). Fails loudly when there is no pointer."""
+        idx = cls(path)
+        meta = idx._store.load()
+        if meta is None:
             raise ValueError(
-                f"{meta_file!r} is missing — {path!r} does not hold a "
-                "persisted IVFPQIndex"
+                f"{idx._store.pointer!r} is missing — {path!r} does not hold "
+                "a persisted IVFPQIndex"
             )
-        with open(meta_file) as fh:
-            meta = _json.load(fh)
-        idx = cls(path, meta["id_col"], meta["vec_col"])
-        for k in ("m", "ksub", "n_lists", "sub_len"):
+        for k in cls._META_KEYS:
             setattr(idx, k, meta[k])
-        # pre-sidecar indexes have no ids/ artifact: None routes the
-        # exactly-once checks to the legacy vectors scan and suppresses
-        # partial sidecar writes (a sidecar missing the legacy corpus'
-        # ids would silently MISS resent ids — worse than the full scan)
-        idx.id_buckets = meta.get("id_buckets")
-        # pre-retrain indexes (and fresh builds) use the root layout
-        idx.generation = meta.get("generation")
-        # pre-r12 metas have no train_sample key: full-corpus training
-        idx.train_sample = meta.get("train_sample")
         return idx
 
     def add_vectors(
@@ -2003,34 +1905,24 @@ class IVFPQIndex:
         physically deleted by the next :meth:`compact` (data loss, not a
         dedup question), and the tombstone sidecar is delta-sized so the
         semi-join costs O(|Δ| + |tombstones|)."""
-        import os as _os
+        from concurrent.futures import ThreadPoolExecutor
 
         if self.m is None:
             raise ValueError("index not built or loaded")
         spark = corpus.sparkSession
         # checkpoint the batch's id column once: the guards below probe it
         # up to three times and the caller's lineage may be an expensive
-        # plan — one narrow |Δ|-row materialization instead of re-running
-        # the corpus plan per probe
+        # plan
         ids = corpus.select(F.col(self.id_col).alias("neighbor_id")).localCheckpoint()
-        # the assign+encode checkpoint is side-effect-free and independent
-        # of the guard outcomes, so it materializes CONCURRENTLY with the
-        # guard probes below (guide §2.6, r14) — durability ordering is
-        # untouched: no write starts until every guard has passed, and a
-        # guard failure still raises before any side effect (the worker's
-        # checkpoint is discarded with the exception)
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        cents = spark.read.parquet(self._art("centroids"))
-        cbs = spark.read.parquet(self._art("codebooks"))
-        with _TPE(max_workers=1) as _pool:
-            f_assigned = _pool.submit(self._assign_ckpt, corpus, cents)
+        cents = spark.read.parquet(self._store.path("centroids"))
+        cbs = spark.read.parquet(self._store.path("codebooks"))
+        # the side-effect-free assign checkpoint materializes concurrently
+        # with the guard probes; no write starts until every guard passed
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            f_assigned = pool.submit(self._assign_ckpt, corpus, cents)
             self._check_add_guards(spark, ids, enforce_unique)
             assigned = f_assigned.result()
-        self._encode_and_write(corpus, cents, cbs, "append", assigned=assigned)
-        # table maintenance on cadence (r13, VERDICT r12 #6) — after the
-        # absorb completes, i.e. between serving turns as compact()'s
-        # single-writer contract requires
+        self._encode_and_write(assigned, cbs, "append", self.m, self.sub_len)
         if self.auto_compact_every:
             self._absorbs_since_compact += 1
             if self._absorbs_since_compact >= self.auto_compact_every:
@@ -2042,14 +1934,11 @@ class IVFPQIndex:
         # ONE driver action answers every guard: the within-batch duplicate
         # probe, the re-sent-id probe, and the tombstone-reservation probe
         # union into a tagged frame whose lexically-first tag reproduces
-        # the original check order ('a_dup' < 'b_resent' < 'c_tomb'), so
-        # error precedence is unchanged while the happy path pays a single
-        # job instead of three. A tombstoned id is refused UNCONDITIONALLY
-        # (even with enforce_unique=False): post-compact it vanishes from
-        # vectors, and if a crash (or failed clear) left the tombstone
-        # behind, silently accepting the re-add would index a vector the
-        # stale tombstone then hides from every search AND the next
-        # compact() physically deletes — fail loudly, pointing at compact().
+        # the check order ('a_dup' < 'b_resent' < 'c_tomb'). A tombstoned
+        # id is refused UNCONDITIONALLY (even with enforce_unique=False):
+        # silently accepting the re-add would index a vector the tombstone
+        # then hides from every search AND the next compact() physically
+        # deletes — fail loudly, pointing at compact().
         bad_frames = []
         if enforce_unique:
             bad_frames.append(
@@ -2064,69 +1953,70 @@ class IVFPQIndex:
                     "neighbor_id", F.lit("b_resent").alias("__why__")
                 )
             )
-        tomb = self._tombstones(spark)
+        tomb = self._store.tombstones(spark)
         if tomb is not None:
             bad_frames.append(
                 ids.join(tomb, "neighbor_id", "semi").select(
                     "neighbor_id", F.lit("c_tomb").alias("__why__")
                 )
             )
-        if bad_frames:
-            bad_all = bad_frames[0]
-            for f in bad_frames[1:]:
-                bad_all = bad_all.unionByName(f)
-            bad = bad_all.orderBy("__why__", "neighbor_id").head(1)
-            if bad:
-                rid, why = bad[0]["neighbor_id"], bad[0]["__why__"]
-                if why == "a_dup":
-                    raise ValueError(
-                        f"id {rid!r} appears more than once in "
-                        "this batch — each id must arrive exactly once; run exact "
-                        "dedup upstream"
-                    )
-                if why == "b_resent":
-                    # distinguish a true replay from a DANGLING sidecar id — a
-                    # crash between the ids/ write and the vectors write left
-                    # the id in ids/ with no vector behind it, so nothing
-                    # would double-score and the remedy is compact() (which
-                    # rebuilds the sidecar from vectors), then replaying the
-                    # batch (ADVICE r11). One cheap point lookup on the
-                    # matched id, only on the already-failing path.
-                    in_vectors = (
-                        spark.read.parquet(self._art("vectors"))
-                        .filter(F.col("neighbor_id") == F.lit(rid))
-                        .head(1)
-                    )
-                    if not in_vectors:
-                        raise ValueError(
-                            f"id {rid!r} is in the ids/ sidecar but has no stored "
-                            "vector — a dangling entry from an add interrupted "
-                            "between the sidecar and vectors writes; run "
-                            "compact() to heal the sidecar, then replay this "
-                            "batch"
-                        )
-                    raise ValueError(
-                        f"id {rid!r} is already indexed — "
-                        "each id must arrive exactly once (replayed batch?); a "
-                        "re-append would double its ADC score"
-                    )
+        if not bad_frames:
+            return
+        bad_all = bad_frames[0]
+        for f in bad_frames[1:]:
+            bad_all = bad_all.unionByName(f)
+        bad = bad_all.orderBy("__why__", "neighbor_id").head(1)
+        if not bad:
+            return
+        rid, why = bad[0]["neighbor_id"], bad[0]["__why__"]
+        if why == "a_dup":
+            raise ValueError(
+                f"id {rid!r} appears more than once in "
+                "this batch — each id must arrive exactly once; run exact "
+                "dedup upstream"
+            )
+        if why == "b_resent":
+            # distinguish a true replay from a DANGLING sidecar id — a
+            # crash between the ids/ write and the vectors write left the
+            # id in ids/ with no vector behind it, so nothing would
+            # double-score and the remedy is compact() (which rebuilds the
+            # sidecar from vectors), then replaying the batch. One point
+            # lookup on the matched id, only on the already-failing path.
+            in_vectors = (
+                spark.read.parquet(self._store.path("vectors"))
+                .filter(F.col("neighbor_id") == F.lit(rid))
+                .head(1)
+            )
+            if not in_vectors:
                 raise ValueError(
-                    f"id {rid!r} is tombstoned — run "
-                    "compact() to clear deletes before re-indexing the id"
+                    f"id {rid!r} is in the ids/ sidecar but has no stored "
+                    "vector — a dangling entry from an add interrupted "
+                    "between the sidecar and vectors writes; run "
+                    "compact() to heal the sidecar, then replay this "
+                    "batch"
                 )
+            raise ValueError(
+                f"id {rid!r} is already indexed — "
+                "each id must arrive exactly once (replayed batch?); a "
+                "re-append would double its ADC score"
+            )
+        raise ValueError(
+            f"id {rid!r} is tombstoned — run "
+            "compact() to clear deletes before re-indexing the id"
+        )
 
     def remove_vectors(self, ids: DataFrame) -> "IVFPQIndex":
         """Delete indexed vectors — the other half of the serving
         lifecycle (takedowns, re-crawled pages, license withdrawals: a
         100-TB corpus sheds documents as surely as it gains them).
-        Deletes are TOMBSTONES: the ids land in a ``tombstones/`` sidecar
-        table and :meth:`search` anti-joins them out of the code scan, so
-        a delete is O(|Δ|) and never rewrites the cell partitions;
-        :meth:`compact` later drops the rows physically. Search results
-        are exactly those of an index that never contained the ids (the
-        ``ann_index_delete`` gate pins this against the unrolled oracle
-        over the surviving corpus, quantizers unchanged — frozen at
-        build, the standard serving contract).
+        Deletes are TOMBSTONES: the ids land in the serving generation's
+        ``tombstones/`` sidecar and :meth:`search` anti-joins them out of
+        the code scan, so a delete is O(|Δ|) and never rewrites the cell
+        partitions; :meth:`compact` later drops the rows physically.
+        Search results are exactly those of an index that never
+        contained the ids (the ``ann_index_delete`` gate pins this
+        against the unrolled oracle over the surviving corpus, quantizers
+        unchanged — frozen at build, the standard serving contract).
 
         Loud-failure contract (the ``IncrementalLSHIndex`` convention):
         a duplicate id within the batch, an id never indexed, or an id
@@ -2135,7 +2025,7 @@ class IVFPQIndex:
         tombstoned id stays RESERVED (``add_vectors`` still refuses it)
         until :meth:`compact` physically drops it, after which the id may
         be indexed again."""
-        import os as _os
+        from concurrent.futures import ThreadPoolExecutor
 
         if self.m is None:
             raise ValueError("index not built or loaded")
@@ -2148,9 +2038,8 @@ class IVFPQIndex:
             F.col(col).cast("bigint").alias("neighbor_id")
         ).localCheckpoint()
         # an empty delete batch would pass every guard vacuously and
-        # append an empty file — permanently materializing the tombstone
-        # sidecar, taxing every later search/add with the anti-join for
-        # nothing (the IncrementalLSHIndex guard's twin; ADVICE r11).
+        # permanently materialize the tombstone sidecar, taxing every
+        # later search/add with the anti-join for nothing — refuse it.
         # ONE aggregate job answers both the empty and the duplicate
         # guard; the offending id is re-fetched only on the failure path.
         stats = (
@@ -2172,25 +2061,17 @@ class IVFPQIndex:
                 f"id {dup[0]['neighbor_id']!r} appears more than once in this "
                 "delete batch — each id may be deleted at most once"
             )
-        tomb_path = self._art("tombstones")
-        prior = (
-            spark.read.parquet(tomb_path) if _os.path.isdir(tomb_path) else None
-        )
-        # pruned scan is valid for the membership check: a stored id
-        # outside the delete batch's touched hash partitions cannot
-        # match any deleted id. The emptied-index guard asks about ids
-        # OUTSIDE the delete batch, so it scans the FULL sidecar (still
-        # the one-column compact table, never the vectors payload). The
-        # three remaining guards are independent, side-effect-free reads —
-        # run them concurrently (guide §2.6), awaiting in the original
-        # order so error precedence is unchanged; nothing durable happens
-        # until the tombstone append below.
+        prior = self._store.tombstones(spark)
+        # the membership check prunes to the delete batch's partitions;
+        # the emptied-index guard asks about ids OUTSIDE the batch, so it
+        # scans the full (one-column) sidecar. The three guards are
+        # independent, side-effect-free reads — run them concurrently and
+        # await in the original order; nothing durable happens until the
+        # tombstone append below.
         stored = self._stored_ids(spark, probe_ids=dele)
         live = self._stored_ids(spark)
         if prior is not None:
             live = live.join(prior, "neighbor_id", "anti")
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=3) as pool:
             f_missing = pool.submit(
                 lambda: dele.join(stored, "neighbor_id", "anti").head(1)
@@ -2223,104 +2104,33 @@ class IVFPQIndex:
                     "this delete would tombstone every remaining indexed vector "
                     "— rebuild the index instead of emptying it"
                 )
-        dele.write.mode("append").parquet(tomb_path)
+        self._store.append_tombstones(dele)
         return self
 
-    def _tombstones(self, spark) -> DataFrame | None:
-        import os as _os
-
-        tomb_path = self._art("tombstones")
-        if not _os.path.isdir(tomb_path):
-            return None
-        return spark.read.parquet(tomb_path)
-
     def _stored_ids(self, spark, probe_ids: DataFrame | None = None) -> DataFrame:
-        """Stored neighbor ids for the exactly-once checks. With the
-        ids/ sidecar present the scan is the compact one-column table;
-        passing ``probe_ids`` additionally prunes it to the delta's
-        touched hash partitions via a STATIC ``IN`` filter (the distinct
-        bucket set is ≤ id_buckets values — a documented bounded fetch,
-        the probed-cell convention), so the check's scan is
-        O(|Δ| + index/id_buckets) BY PLAN rather than an index-wide id
-        column scan (VERDICT r10 #3). A pre-sidecar index falls back to
-        the vectors projection (columnar-pruned, index-sized)."""
-        import os as _os
-
-        ids_path = self._art("ids")
-        if self.id_buckets and _os.path.isdir(ids_path):
-            stored = spark.read.parquet(ids_path)
-            if probe_ids is not None:
-                touched = [
-                    r["__idb__"]
-                    for r in probe_ids.select(
-                        F.pmod(
-                            F.xxhash64("neighbor_id"), F.lit(self.id_buckets)
-                        ).alias("__idb__")
-                    )
-                    .distinct()
-                    .collect()
-                ]
-                stored = stored.filter(F.col("__idb__").isin(touched))
-            return stored.select("neighbor_id")
-        return spark.read.parquet(self._art("vectors")).select(
-            "neighbor_id"
-        )
-
-    def _sweep_orphans(self) -> None:
-        """Remove every generation dir the meta pointer does NOT name —
-        a crashed retrain/compact's half-written ``gN`` AND the previous
-        serving generation deferred for reader continuity — plus, once
-        generation-based, the pre-migration root-layout artifacts.
-        Shared by :meth:`retrain` and :meth:`compact` (both create
-        generations, so either's next run reclaims the other's
-        leftovers)."""
-        import os as _os
-        import re as _re
-        import shutil as _shutil
-
-        cur = self.generation
-        for d in _os.listdir(self.path):
-            if _re.fullmatch(r"g\d+", d) and d != cur:
-                _shutil.rmtree(_os.path.join(self.path, d), ignore_errors=True)
-        if cur:
-            for name in (
-                "centroids", "codebooks", "codes", "vectors", "ids", "tombstones"
-            ):
-                _shutil.rmtree(_os.path.join(self.path, name), ignore_errors=True)
+        """Stored neighbor ids for the exactly-once checks — the ids
+        sidecar, pruned to ``probe_ids``' partitions when given (see
+        ``GenerationStore.read_ids``)."""
+        return self._store.read_ids(spark, "neighbor_id", self.id_buckets, probe_ids)
 
     def compact(self, n_files: int = 1) -> "IVFPQIndex":
         """Table-maintenance pass: physically drop tombstoned rows and
         collapse the small files accreted by :meth:`add_vectors` (every
         absorb appends files to ``vectors/`` and to each touched cell
         partition of ``codes/`` — a long-lived index accretes
-        deltas × cells small files, the classic streaming-table ailment;
-        the twin of ``IncrementalLSHIndex.compact_index``). The rewritten
-        generation holds ``n_files`` files for ``vectors/`` (size for
-        the real corpus; 1 is right at gate scale) and ONE file per cell
-        partition for ``codes/``. The tombstone sidecar dies with the
-        old generation, so previously-deleted ids become indexable
-        again. Call between serving turns (single writer — never
-        concurrently with add/remove/retrain).
-
-        Durability (r12 — upgraded from the staged in-place overwrite,
-        whose per-artifact rewrites were individually non-atomic): the
-        compacted content is written into the NEXT generation directory
-        (``gN``, the :meth:`retrain` machinery — quantizers copied
-        unchanged, vectors/codes rewritten, the ids sidecar re-derived
-        from the surviving vectors, which also heals any dangling id
-        left by an interrupted add), then the meta pointer flips with
-        ONE atomic ``os.replace`` — compaction is CRASH-ATOMIC: a crash
-        anywhere before the flip leaves the old generation serving
-        (the orphan ``gN`` is swept by the next compact/retrain), a
-        crash after the flip leaves unreferenced old files only. The
-        previous generation survives until the next compact/retrain's
-        sweep (N−1 generations — the reader-continuity contract). A
-        STALE tombstone (written onto the serving generation after its
-        ids were already dropped) still only DELAYS a re-add loudly
-        until the next compact migrates past it — never hides one."""
-        import json as _json
-        import os as _os
-        import shutil as _shutil
+        deltas × cells small files; the twin of
+        ``IncrementalLSHIndex.compact_index``). Writes the NEXT generation
+        — quantizers copied unchanged, ``n_files`` files for ``vectors/``
+        (size for the real corpus; 1 is right at gate scale), ONE file per
+        cell partition for ``codes/``, the ids sidecar re-derived from the
+        surviving vectors (which also heals a dangling id left by an
+        interrupted add) — and flips the pointer to it (crash-atomic; the
+        previous generation stays readable until the next maintenance
+        op's sweep). The tombstones stay behind with the old generation,
+        so previously-deleted ids become indexable again. Call between
+        serving turns (single writer — never concurrently with
+        add/remove/retrain)."""
+        import shutil
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark.sql import SparkSession
@@ -2328,82 +2138,44 @@ class IVFPQIndex:
         if self.m is None:
             raise ValueError("index not built or loaded")
         spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-        self._sweep_orphans()
-        # every read below resolves its parquet paths NOW — the current
-        # generation's — so flipping self.generation later only redirects
-        # the writes (the retrain() pattern)
-        src_cents, src_cbs = self._art("centroids"), self._art("codebooks")
-        vectors = spark.read.parquet(self._art("vectors"))
-        codes = spark.read.parquet(self._art("codes"))
-        tomb = self._tombstones(spark)
+        self._store.sweep()
+        vectors = spark.read.parquet(self._store.path("vectors"))
+        codes = spark.read.parquet(self._store.path("codes"))
+        tomb = self._store.tombstones(spark)
         if tomb is not None:
             tomb = F.broadcast(tomb)
             vectors = vectors.join(tomb, "neighbor_id", "anti")
             codes = codes.join(tomb, "neighbor_id", "anti")
-        cur = self.generation
-        new_gen = f"g{int(cur[1:]) + 1}" if cur else "g1"
-        old_state = (self.generation, self.id_buckets)
-        try:
-            if self.id_buckets is None:
-                # a legacy (pre-sidecar) index is fully rewritten here, so
-                # the partial-sidecar hazard no longer applies — backfill
-                # (the retrain() rule; restored by the except on failure)
-                self.id_buckets = 64
-            self.generation = new_gen
-            _os.makedirs(_os.path.join(self.path, new_gen), exist_ok=True)
-            # quantizers are unchanged by compaction — a FILE copy into
-            # the new generation (bit-identical parquet, zero Spark jobs;
-            # r13 optimization round — the read→rewrite paid two jobs per
-            # compact for content the operation never touches)
-            _shutil.copytree(src_cents, self._art("centroids"), dirs_exist_ok=True)
-            _shutil.copytree(src_cbs, self._art("codebooks"), dirs_exist_ok=True)
-            # the vectors rewrite, the codes rewrite, and the ids-sidecar
-            # re-derivation are mutually independent — overlap all three
-            # so each one's straggler tail is back-filled by the others
-            # (guide §2.6); crash-atomicity is unaffected (nothing is
-            # referenced until the pointer flips below). The ids derive
-            # from the SAME surviving-vectors frame as the vectors
-            # rewrite (old-generation scan, column-pruned to the id, with
-            # the tombstone anti-join) — identical rows to a read-back of
-            # the compacted files, without serializing behind them; drops
-            # tombstoned ids and heals dangling sidecar entries alike
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                fv = pool.submit(
+        gen = self._store.next_generation()
+        # quantizers are unchanged by compaction — a FILE copy (bit-identical
+        # parquet, zero Spark jobs)
+        for name in ("centroids", "codebooks"):
+            shutil.copytree(self._store.path(name), self._store.path(name, gen))
+        # the vectors rewrite, the codes rewrite (repartitioned ON the cell
+        # column → one file per cell partition), and the ids re-derivation
+        # (from the same surviving-vectors frame) are independent — overlap
+        # all three
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futs = [
+                pool.submit(
                     lambda: vectors.coalesce(n_files)
                     .write.mode("overwrite")
-                    .parquet(self._art("vectors"))
-                )
-                # repartition ON the cell column → every cell lands in
-                # exactly one task → one file per cell partition
-                fc = pool.submit(
+                    .parquet(self._store.path("vectors", gen))
+                ),
+                pool.submit(
                     lambda: codes.repartition("__cell__")
                     .write.mode("overwrite")
                     .partitionBy("__cell__")
-                    .parquet(self._art("codes"))
-                )
-                fi = pool.submit(
-                    lambda: vectors.select(
-                        "neighbor_id",
-                        F.pmod(
-                            F.xxhash64("neighbor_id"), F.lit(self.id_buckets)
-                        ).alias("__idb__"),
-                    )
-                    .repartition("__idb__")
-                    .write.mode("overwrite")
-                    .partitionBy("__idb__")
-                    .parquet(self._art("ids"))
-                )
-                fv.result()
-                fc.result()
-                fi.result()
-        except BaseException:
-            self.generation, self.id_buckets = old_state
-            raise
-        # THE swap: one atomic rename of the pointer file
-        tmp = self._meta_file() + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump({k: getattr(self, k) for k in self._META_KEYS}, fh)
-        _os.replace(tmp, self._meta_file())
+                    .parquet(self._store.path("codes", gen))
+                ),
+                pool.submit(
+                    self._store.write_ids, vectors.select("neighbor_id"),
+                    "neighbor_id", self.id_buckets, "overwrite", gen,
+                ),
+            ]
+            for f in futs:
+                f.result()
+        self._store.flip(gen, self._meta())
         return self
 
     def retrain(
@@ -2416,21 +2188,16 @@ class IVFPQIndex:
         codebooks: DataFrame | None = None,
         train_sample: "int | None | str" = "stored",
     ) -> "IVFPQIndex":
-        """Quantizer-refresh migration — the missing months-long serving
-        story (VERDICT r10 #4): :meth:`add_vectors` keeps quantizers
-        FROZEN (the correct absorb contract), so after enough corpus
-        drift recall decays and the only prior recourse was
-        ``build(overwrite=True)`` — a full offline rebuild with no
-        service continuity. retrain() trains NEW centroids/codebooks on
-        the CURRENT live corpus (the persisted vectors table, minus
-        pending tombstones — deletes are applied like :meth:`compact`),
-        re-encodes every vector into a NEW GENERATION directory
-        (``g1``, ``g2``, …) alongside the serving one, and swaps with ONE
-        atomic ``os.replace`` of the meta sidecar — the pointer every
-        reader resolves artifacts through (the ParquetMapState
-        versioned-parquet + pointer-flip pattern). Readers keep serving
-        the old generation until they re-``load``; nothing is ever
-        half-swapped.
+        """Quantizer-refresh migration: :meth:`add_vectors` keeps
+        quantizers FROZEN (the correct absorb contract), so after enough
+        corpus drift recall decays. retrain() trains NEW
+        centroids/codebooks on the CURRENT live corpus (the persisted
+        vectors, minus pending tombstones — deletes are applied like
+        :meth:`compact`), re-encodes every vector into the next
+        generation, and flips the pointer to it. Readers keep serving the
+        old generation until they re-``load``; it stays on disk until the
+        next maintenance op's sweep, so the contract is "re-load before
+        the index is maintained TWICE". Single writer assumed.
 
         Defaults reproduce :meth:`build`'s training (smallest-id
         centroids + Lloyd codebooks on the live corpus), so
@@ -2439,35 +2206,15 @@ class IVFPQIndex:
         against the same unrolled oracle as ``ann_ivf_pq``. Pass
         ``centroids``/``codebooks`` (e.g. :func:`kmeans_centroids`) for
         trained quantizers, and/or new ``m``/``ksub``/``n_lists`` to
-        re-shape the index.
-
-        Crash windows, all loud-or-invisible: a crash during the new
-        generation's writes leaves the meta pointing at the OLD
-        generation (still serving, still correct; the orphan ``gN`` dir
-        is swept by the next retrain). Never a mixed-generation read —
-        every artifact path is resolved through the flipped pointer.
-
-        Reader continuity (ADVICE r11 medium): the old generation's
-        files are NOT removed here — a searcher in another process that
-        ``load()``-ed the pre-flip meta keeps resolving the old
-        generation's parquet and must be able to finish its queries.
-        Reclamation is deferred to the NEXT retrain's orphan sweep, so
-        exactly N−1 generations survive on disk and the contract is
-        "re-load before the index is retrained TWICE", not "re-load
-        before the files vanish mid-query". Single-writer still assumed
-        (retrain never runs concurrently with add/remove/compact)."""
-        import json as _json
-        import os as _os
-
+        re-shape the index."""
         from pyspark.sql import SparkSession
 
         if self.m is None:
             raise ValueError("index not built or loaded")
         spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-        cur = self.generation
-        self._sweep_orphans()
-        live = spark.read.parquet(self._art("vectors"))
-        tomb = self._tombstones(spark)
+        self._store.sweep()
+        live = spark.read.parquet(self._store.path("vectors"))
+        tomb = self._store.tombstones(spark)
         if tomb is not None:
             live = live.join(F.broadcast(tomb), "neighbor_id", "anti")
         corpus = live.select(
@@ -2478,9 +2225,7 @@ class IVFPQIndex:
         ksub = ksub if ksub is not None else self.ksub
         n_lists = n_lists if n_lists is not None else self.n_lists
         # "stored" (the default) reproduces the build's recorded sampling
-        # choice — stale-build → absorb → retrain() stays verbatim-equal
-        # to a fresh build with the same arguments; pass an int to bound
-        # (or None to un-bound) the training explicitly
+        # choice; pass an int to bound (or None to un-bound) explicitly
         ts = self.train_sample if train_sample == "stored" else train_sample
         cbs = (
             codebooks
@@ -2491,85 +2236,19 @@ class IVFPQIndex:
             )
         )
         if codebooks is not None:
-            shape = cbs.agg(
-                F.max("sub").alias("s"),
-                F.max("cent_id").alias("c"),
-                F.count(F.lit(1)).alias("n"),
-            ).first()
-            if int(shape["s"]) + 1 != m or int(shape["c"]) + 1 != ksub or int(
-                shape["n"]
-            ) != m * ksub:
-                raise ValueError(
-                    f"codebooks shape (subs={int(shape['s']) + 1}, "
-                    f"ksub={int(shape['c']) + 1}, rows={int(shape['n'])}) does "
-                    f"not match retrain(m={m}, ksub={ksub})"
-                )
+            self._check_codebooks(cbs, m, ksub, "retrain")
         cents = (
             centroids
             if centroids is not None
             else _ivf_default_centroids(corpus, self.id_col, self.vec_col, n_lists)
         )
-        new_gen = f"g{int(cur[1:]) + 1}" if cur else "g1"
-        old_state = (
-            self.generation, self.m, self.ksub, self.n_lists, self.sub_len,
-            self.id_buckets, self.train_sample,
+        # the lazy frames above already resolved the serving generation's
+        # paths, so training and encoding read the old artifacts while the
+        # writes go to the next generation
+        self._write_generation(
+            corpus, cents, cbs,
+            dict(m=m, ksub=ksub, n_lists=n_lists, train_sample=ts),
         )
-        try:
-            if self.id_buckets is None:
-                # a legacy (pre-sidecar) index is rewritten from scratch
-                # here, so the partial-sidecar hazard that kept id_buckets
-                # None no longer applies — backfill it and escape the
-                # index-wide exactly-once scans for good (restored to None
-                # by the except if this generation never completes)
-                self.id_buckets = 64
-            # every lazy frame above resolved its input PATHS already (the
-            # old generation's), so flipping self.generation now only
-            # redirects the WRITES — the training/encoding reads still
-            # consume the old artifacts, which stay in place until after
-            # the meta flip
-            self.generation = new_gen
-            sub_len = int(cbs.agg(F.max(F.size("__cent__")).alias("L")).first()["L"])
-            self.m, self.ksub, self.n_lists, self.sub_len = m, ksub, n_lists, sub_len
-            self.train_sample = ts
-            _os.makedirs(_os.path.join(self.path, new_gen), exist_ok=True)
-            # overlap the tiny quantizer writes with the encode pass
-            # (guide §2.6, r14) — the generation stays unreferenced until
-            # the meta flip below, so failure anywhere orphans it whole
-            from concurrent.futures import ThreadPoolExecutor as _TPE
-
-            with _TPE(max_workers=2) as _pool:
-                _fc = _pool.submit(
-                    lambda: cents.write.mode("overwrite").parquet(
-                        self._art("centroids")
-                    )
-                )
-                _fb = _pool.submit(
-                    lambda: cbs.write.mode("overwrite").parquet(
-                        self._art("codebooks")
-                    )
-                )
-                self._encode_and_write(corpus, cents, cbs, "overwrite")
-                _fc.result()
-                _fb.result()
-        except BaseException:
-            # the in-process object must never point at a half-written
-            # generation — restore and let the orphan sweep reclaim it
-            (
-                self.generation, self.m, self.ksub, self.n_lists, self.sub_len,
-                self.id_buckets, self.train_sample,
-            ) = old_state
-            raise
-        # THE swap: one atomic rename of the pointer file
-        tmp = self._meta_file() + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump({k: getattr(self, k) for k in self._META_KEYS}, fh)
-        _os.replace(tmp, self._meta_file())
-        # the old generation is unreferenced by the NEW meta but may still
-        # be serving a cross-process reader that load()ed the old pointer
-        # — leave its files in place; the NEXT retrain's orphan sweep
-        # (above) reclaims it, so N−1 generations survive on disk
-        # (ADVICE r11 medium: rmtree here yanked parquet out from under a
-        # reader mid-query, contradicting the continuity contract)
         return self
 
     def search(
@@ -2592,27 +2271,23 @@ class IVFPQIndex:
         ``dynamicpruningexpression(true)``, i.e. declines; plan-pinned in
         ``test_ivf_pq_index_search_prunes_code_partitions``). The
         per-(query, cell) restriction itself is still the join."""
-        import os as _os
-
         if self.m is None:
             raise ValueError("index not built or loaded")
         # artifacts are read through the QUERIES frame's session — every
         # frame in the search plan must come from one session to be
-        # joinable, and the queries frame fixes which one (r10 self
-        # review #7: a separately-stored session would be dead weight or,
-        # worse, a cross-session join error)
+        # joinable, and the queries frame fixes which one
         spark = queries.sparkSession
-        cents = spark.read.parquet(self._art("centroids"))
-        codebooks = spark.read.parquet(self._art("codebooks"))
-        codes = spark.read.parquet(self._art("codes")).select(
+        cents = spark.read.parquet(self._store.path("centroids"))
+        codebooks = spark.read.parquet(self._store.path("codebooks"))
+        codes = spark.read.parquet(self._store.path("codes")).select(
             "neighbor_id", "__cell__", "sub", "code"
         )
-        vectors = spark.read.parquet(self._art("vectors"))
+        vectors = spark.read.parquet(self._store.path("vectors"))
         # tombstoned ids leave the scan here — the shortlist and the exact
         # re-rank only ever see neighbors that survive the ADC stage, so
         # filtering codes alone yields exactly the never-indexed answer;
         # the tombstone set is delta-sized between compactions (broadcast)
-        tomb = self._tombstones(spark)
+        tomb = self._store.tombstones(spark)
         if tomb is not None:
             codes = codes.join(F.broadcast(tomb), "neighbor_id", "anti")
         q = queries.select(

@@ -2345,7 +2345,7 @@ def q_dedup_index_delete(spark, sf_dir):
     crawl shape), tombstone every doc_id ≡ 3 (mod 7) — takedowns /
     re-crawls / license withdrawals — then COMPACT (r12: a crash-atomic
     generation flip that physically drops the tombstoned band-bucket
-    and id rows; the sidecar dies with the old generation) and cluster
+    and id rows; the tombstones stay with the old generation) and cluster
     from pairs(). The final labels must equal
     the from-scratch batch clustering over the SURVIVING documents (the
     same recursive-CTE oracle filtered to survivors): a removed doc's
@@ -2384,10 +2384,8 @@ def q_dedup_index_delete(spark, sf_dir):
         F.col("cluster_id").cast("bigint").alias("cluster_id"),
     )
     # labels are localCheckpoint-materialized per round — the tables can go
-    # (compact_index lands the rewrite at generation g1 behind the pointer)
     out = out.localCheckpoint()
-    for t in (table, f"{table}__ids", f"{table}__g1", f"{table}__g1__ids"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    idx.drop_tables()
     return out
 
 
@@ -2446,8 +2444,7 @@ def q_dedup_index_rebuild(spark, sf_dir):
         F.col("cluster_id").cast("bigint").alias("cluster_id"),
     )
     out = out.localCheckpoint()
-    for t in (table, f"{table}__ids", f"{table}__g1", f"{table}__g1__ids"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    idx.drop_tables()
     return out
 
 
@@ -2510,9 +2507,7 @@ def q_dedup_index_autocompact(spark, sf_dir):
         F.col("cluster_id").cast("bigint").alias("cluster_id"),
     )
     out = out.localCheckpoint()
-    for g in ("", "__g1", "__g2"):
-        for suf in ("", "__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {table}{g}{suf}")
+    idx.drop_tables()
     return out
 
 
@@ -7308,7 +7303,7 @@ def q_ann_ivf_pq(spark, sf_dir):
 def q_ann_index_persist(spark, sf_dir):
     """ANN index persistence (similarity.IVFPQIndex, r10 stretch —
     VERDICT r9 #9): train the IVF-PQ index ONCE (same parameters as
-    `ann_ivf_pq`), write its four parquet artifacts + meta sidecar, then
+    `ann_ivf_pq`), write its parquet artifacts + pointer (generation g0), then
     RE-ATTACH in a fresh session (`spark.newSession()` — no shared
     driver-side state) and serve the probe from the persisted tables.
     The probed cells hit the code scan as PARTITION PRUNING (codes are
@@ -7385,8 +7380,8 @@ def q_ann_index_autocompact(spark, sf_dir):
     )
     idx.add_vectors(emb.filter(third == 1))  # → auto-compact g1
     idx.add_vectors(emb.filter(third == 2))  # → auto-compact g2
-    if idx.generation != "g2":  # the cadence itself is part of the contract
-        raise AssertionError(f"expected generation g2, got {idx.generation}")
+    if idx.generation != 2:  # the cadence itself is part of the contract
+        raise AssertionError(f"expected generation 2, got {idx.generation}")
     q = emb.filter(F.col("vec_id") < 20)
     return idx.search(q, k=5, n_probe=2, shortlist=20)
 
@@ -7425,10 +7420,11 @@ def q_ann_index_retrain(spark, sf_dir):
     months-of-drift scenario), absorb the odd half against those frozen
     quantizers, then retrain() — new centroids/codebooks trained on the
     full live corpus, every vector re-encoded into a new generation
-    directory, the meta pointer flipped atomically, the old generation
-    reclaimed. Because retrain's defaults reproduce build's training,
-    the answer must equal a FRESH full-corpus build verbatim — the same
-    unrolled `ann_ivf_pq` oracle as ann_index_persist. Crash windows
+    directory, the pointer flipped atomically, the old generation kept
+    for readers until the next sweep. Because retrain's defaults
+    reproduce build's training, the answer must equal a FRESH
+    full-corpus build verbatim — the same unrolled `ann_ivf_pq` oracle
+    as ann_index_persist. Crash windows
     (orphan generation swept, old generation serves until the flip) are
     pinned in pytest."""
     import os
@@ -8092,10 +8088,7 @@ def q_streaming_dedup_pipeline_bucketed(spark, sf_dir):
         # pairs/labels are localCheckpoint-materialized, so the index
         # table can go as soon as the stream stops — don't leak
         # metastore entries across gates
-        cleanup=lambda: [
-            spark.sql(f"DROP TABLE IF EXISTS {table}"),
-            spark.sql(f"DROP TABLE IF EXISTS {table}__ids"),
-        ],
+        cleanup=idx.drop_tables,
     )
     return cc.labels().select(
         F.col("id").cast("bigint").alias("doc_id"),
@@ -8142,10 +8135,7 @@ def q_streaming_dedup_pipeline_stars(spark, sf_dir):
         docs,
         lambda batch_df, epoch_id: cc.add_edges(idx.add_docs(batch_df), "id_a", "id_b"),
         "storm_spark_sdpls_",
-        cleanup=lambda: [
-            spark.sql(f"DROP TABLE IF EXISTS {table}"),
-            spark.sql(f"DROP TABLE IF EXISTS {table}__ids"),
-        ],
+        cleanup=idx.drop_tables,
     )
     return cc.labels().select(
         F.col("id").cast("bigint").alias("doc_id"),

@@ -13,6 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def code_cache_opt() -> str:
+    """JVM option reserving the JIT code cache, from
+    ``$SPARK_GRAFT_CODE_CACHE``: unset or blank (whitespace included)
+    means the 2g default — a blank value must not yield the malformed
+    flag ``-XX:ReservedCodeCacheSize=``, which fails the JVM launch;
+    "off"/"none"/"disabled"/"0" skips the flag entirely (the documented
+    opt-out)."""
+    size = (os.environ.get("SPARK_GRAFT_CODE_CACHE") or "").strip() or "2g"
+    if size.lower() in ("off", "none", "disabled", "0"):
+        return ""
+    return f"-XX:ReservedCodeCacheSize={size}"
+
+
 def get_spark(
     app_name: str = "storm_spark",
     cpus: int | None = None,
@@ -39,15 +52,7 @@ def get_spark(
     # not committed, memory — the cost is address space only. The same
     # setting applies to long-lived executors on a real cluster via
     # spark.executor.extraJavaOptions below.
-    # An empty env value must not yield the malformed flag
-    # `-XX:ReservedCodeCacheSize=` (JVM launch failure — ADVICE r13 low):
-    # blank falls back to the default; "off"/"none"/"disabled"/"0" skips
-    # the flag entirely (the documented opt-out).
-    code_cache = os.environ.get("SPARK_GRAFT_CODE_CACHE") or "2g"
-    if code_cache.strip().lower() in ("off", "none", "disabled", "0"):
-        jit_opt = ""
-    else:
-        jit_opt = f"-XX:ReservedCodeCacheSize={code_cache}"
+    jit_opt = code_cache_opt()
 
     # Python workers unpickle engine classes (BoltCollector, Aggregator
     # kernels) by module reference; make the package importable there even

@@ -12,7 +12,7 @@ REAL second OS process:
   `IVFPQIndex.load()`s the index and runs a search loop while the
   parent retrains mid-loop — the reference shape the verdict asked for;
 - the LSH test's child reads the index the way any external reader
-  does — resolve the `{path}__meta.json` pointer, scan the named
+  does — resolve the `{path}/_pointer.json` pointer, scan the named
   generation's parquet — via DuckDB (no second JVM needed: the LSH
   reader surface IS the pointer + parquet files; the metastore table
   names are a single-session convenience, not the cross-process
@@ -101,12 +101,12 @@ index_path, outpath, flip_sentinel, ready_sentinel = sys.argv[1:5]
 
 
 def resolve():
-    with open(index_path + "__meta.json") as fh:
+    with open(os.path.join(index_path, "_pointer.json")) as fh:
         return json.load(fh)["generation"]
 
 
 def count(gen):
-    p = f"{index_path}__g{gen}"
+    p = os.path.join(index_path, f"g{gen}", "index")
     return duckdb.sql(
         f"SELECT count(*) FROM read_parquet('{p}/*.parquet')"
     ).fetchone()[0]
@@ -210,7 +210,7 @@ def test_ann_index_reader_survives_retrain_cross_process(spark, tmp_path):
     try:
         _await(ready, proc, 240, "child first search")
         idx.retrain(n_iters=1)  # the swap, while the child loops
-        assert idx.generation == "g1"
+        assert idx.generation == 1
         with open(flip, "w") as fh:
             fh.write("flipped")
         _finish(proc)
@@ -218,7 +218,7 @@ def test_ann_index_reader_survives_retrain_cross_process(spark, tmp_path):
         if proc.poll() is None:
             proc.kill()
     got = json.load(open(outpath))
-    assert got["gen0"] is None and got["gen1"] == "g1", got
+    assert got["gen0"] == 0 and got["gen1"] == 1, got
     assert got["seen_flip"] and got["post_flip_old_ok"], got
     assert got["pre_iters"] >= 1 and got["reload_rows"] > 0, got
 
@@ -242,7 +242,7 @@ def test_lsh_index_reader_survives_rebuild_cross_process(spark, tmp_path):
     try:
         idx = IncrementalLSHIndex("doc_id", "text", **kw)
         idx.add_docs(docs).collect()
-        idx.compact_index()  # creates the pointer + g1
+        idx.compact_index()  # g0 → g1
         assert idx.generation == 1
         outpath = str(tmp_path / "child_out.json")
         flip, ready = str(tmp_path / "flip"), str(tmp_path / "ready")
@@ -265,7 +265,4 @@ def test_lsh_index_reader_survives_rebuild_cross_process(spark, tmp_path):
         # new generation readable and bands-2 sized: 30 docs × 2 bands
         assert got["reload_rows"] == 60, got
     finally:
-        for t in ("lsh_xproc_test", "lsh_xproc_test__ids",
-                  "lsh_xproc_test__g1", "lsh_xproc_test__g1__ids",
-                  "lsh_xproc_test__g2", "lsh_xproc_test__g2__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx.drop_tables()

@@ -865,8 +865,7 @@ def test_lsh_index_exactly_once_ids_scan_is_partition_pruned(spark, tmp_path):
         # the unprobed read is the FULL id set (the emptied-index guard)
         assert idx._stored_ids(spark).count() == 30
     finally:
-        for t in ("lsh_prune_test", "lsh_prune_test__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx.drop_tables()
 
 
 def test_salted_star_is_one_linear_plan(spark):
@@ -887,7 +886,7 @@ def test_salted_star_is_one_linear_plan(spark):
             for i in range(40)]
     rows += [(100 + i, "the same boilerplate page") for i in range(12)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    salted = minhash_lsh_edges(docs, "doc_id", "text", salt_threshold=5)
+    salted = minhash_lsh_edges(docs, "doc_id", "text", salt=True)
     plan = salted._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Window") == 2, plan
     assert "Join" not in plan and "Union" not in plan, plan

@@ -217,12 +217,9 @@ def test_star_edges_same_components_as_pair_clique(spark, docs, bands, salt):
     corpus (hypothesis draws include exact duplicates, which land whole
     groups in one band bucket — the hot-bucket case the star emission
     exists for) the connected components of the O(m)-per-bucket star
-    edges equal those of the O(m²) pair clique — in ALL THREE emission
-    modes: plain/globally-salted (drawn; salt_threshold=None opts out of
-    the r13 default-on adaptive mode so the UNCONDITIONAL star paths
-    stay covered) AND adaptive (r12 salt_threshold=2, low enough that
-    the duplicate groups hypothesis plants actually cross it,
-    exercising the hot/cold split)."""
+    edges equal those of the O(m²) pair clique — in every emission mode:
+    plain/globally-salted (drawn, with salt=False) AND the default
+    salted star (salt=True, 32 salt buckets unless drawn)."""
     from storm_spark.functions import dedup
 
     df = spark.createDataFrame(
@@ -240,7 +237,7 @@ def test_star_edges_same_components_as_pair_clique(spark, docs, bands, salt):
         (r.id, r.cluster_id)
         for r in dedup.near_dup_clusters(
             dedup.minhash_lsh_edges(
-                df, "doc_id", "text", salt_buckets=salt, salt_threshold=None, **kw
+                df, "doc_id", "text", salt_buckets=salt, salt=False, **kw
             )
         ).collect()
     }
@@ -249,7 +246,7 @@ def test_star_edges_same_components_as_pair_clique(spark, docs, bands, salt):
         (r.id, r.cluster_id)
         for r in dedup.near_dup_clusters(
             dedup.minhash_lsh_edges(
-                df, "doc_id", "text", salt_buckets=salt, salt_threshold=2, **kw
+                df, "doc_id", "text", salt_buckets=salt, salt=True, **kw
             )
         ).collect()
     }

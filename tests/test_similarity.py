@@ -542,25 +542,25 @@ def test_ivf_pq_index_remove_vectors_and_compact(clustered_vectors, tmp_path, sp
     pre = sorted(map(tuple, idx.search(queries, **args).collect()))
     assert pre == expect  # tombstone path
 
-    files_before = len(glob.glob(os.path.join(path, "codes", "**", "*.parquet"),
+    files_before = len(glob.glob(os.path.join(idx._store.path("codes"), "**", "*.parquet"),
                                  recursive=True))
     idx.compact()
     post = sorted(map(tuple, idx.search(queries, **args).collect()))
     assert post == expect  # rewritten generation
-    # r12: the compacted content is a NEW generation behind the atomic
-    # meta flip (crash-atomic; old files survive until the next sweep)
-    assert idx.generation == "g1"
-    gen_codes = idx._art("codes")
+    # the compacted content is a NEW generation behind the atomic
+    # pointer flip (crash-atomic; old files survive until the next sweep)
+    assert idx.generation == 1
+    gen_codes = idx._store.path("codes")
     files_after = len(glob.glob(os.path.join(gen_codes, "**", "*.parquet"),
                                 recursive=True))
     cells = len(glob.glob(os.path.join(gen_codes, "__cell__=*")))
     assert files_after == cells < files_before
-    # the new generation carries no tombstone sidecar (it died with g0)
-    assert not os.path.isdir(idx._art("tombstones"))
+    # the new generation carries no tombstone sidecar (it stayed with g0)
+    assert not os.path.isdir(idx._store.path("tombstones"))
     # tombstoned rows are physically gone
     vec_ids = {
         r.neighbor_id
-        for r in spark.read.parquet(idx._art("vectors")).collect()
+        for r in spark.read.parquet(idx._store.path("vectors")).collect()
     }
     gone = {r.vec_id for r in dele.collect()}
     assert not (vec_ids & gone)
@@ -605,7 +605,7 @@ def test_ivf_pq_index_remove_vectors_guards(clustered_vectors, tmp_path):
     with _pytest.raises(ValueError, match="empty delete batch"):
         idx.remove_vectors(spark.createDataFrame([], "vec_id bigint"))
     import os as _os
-    assert not _os.path.isdir(_os.path.join(str(tmp_path / "g"), "tombstones"))
+    assert not _os.path.isdir(idx._store.path("tombstones"))
     idx.remove_vectors(one)
     with _pytest.raises(ValueError, match="already tombstoned"):
         idx.remove_vectors(one)
@@ -648,7 +648,7 @@ def test_ivf_pq_index_search_prunes_code_partitions(spark, tmp_path):
     assert pf, plan[:2000]
     # the filter is real: probed cells < n_lists, so some partition dirs
     # must NOT appear in the filter's value list
-    n_dirs = len(glob.glob(f"{path}/codes/__cell__=*"))
+    n_dirs = len(glob.glob(f"{idx._store.path('codes')}/__cell__=*"))
     listed = max(m.count(",") + 1 for m in pf)
     assert listed < n_dirs
 
@@ -678,10 +678,10 @@ def test_ivf_pq_index_tombstone_recovery_contract(clustered_vectors, tmp_path):
     idx.compact()  # ids 5 and 7 physically gone (new generation, g1)
     # a STALE tombstone on the serving generation (the rows are already
     # gone) still blocks the re-add loudly — and the next compact's
-    # generation flip leaves it behind, freeing the id (r12: the pending
-    # sidecar dies with the generation; no separate clear step to lose)
+    # generation flip leaves it behind, freeing the id (the pending
+    # sidecar stays with its generation; no separate clear step to lose)
     spark.createDataFrame([(7,)], "neighbor_id bigint").write.parquet(
-        idx._art("tombstones")
+        idx._store.path("tombstones")
     )
     with _pytest.raises(ValueError, match="tombstoned"):
         idx.add_vectors(clustered_vectors.filter(F.col("vec_id") == 7))
@@ -722,12 +722,12 @@ def test_ivf_pq_index_add_crash_between_writes_is_safe(clustered_vectors, tmp_pa
         )
         .write.mode("append")
         .partitionBy("__idb__")
-        .parquet(os.path.join(idx.path, "ids"))
+        .parquet(idx._store.path("ids"))
     )
     late.select(
         F2.col("vec_id").alias("neighbor_id"),
         F2.col("embedding").cast("array<double>").alias("__cv__"),
-    ).write.mode("append").parquet(os.path.join(idx.path, "vectors"))
+    ).write.mode("append").parquet(idx._store.path("vectors"))
 
     after = sorted(map(tuple, idx.search(queries, **args).collect()))
     assert after == before  # dangling vector row is invisible, never wrong
@@ -814,44 +814,11 @@ def test_ivf_pq_index_exactly_once_check_is_partition_pruned(spark, tmp_path):
         if "__idb__" in m and ("IN" in m or "=" in m)
     ]
     assert pf, plan[:2000]
-    n_dirs = len(glob.glob(f"{path}/ids/__idb__=*"))
+    n_dirs = len(glob.glob(f"{idx._store.path('ids')}/__idb__=*"))
     assert n_dirs > 1  # multiple buckets exist, the filter has teeth
     # one delta id touches exactly one bucket — far fewer than all dirs
     listed = max(m.count(",") + 1 for m in pf)
     assert listed < n_dirs
-
-
-def test_ivf_pq_index_legacy_without_ids_sidecar_still_enforces(
-    clustered_vectors, tmp_path, spark
-):
-    """A pre-sidecar index (no ids/ artifact, no id_buckets in meta —
-    simulated by deleting both) must keep enforcing exactly-once via the
-    legacy vectors scan, and must NOT start a partial sidecar on absorb
-    (it would silently miss the legacy corpus' ids)."""
-    import json
-    import os
-    import shutil
-
-    import pytest as _pytest
-
-    from storm_spark.functions import similarity
-
-    corpus = clustered_vectors
-    path = str(tmp_path / "legacy")
-    similarity.IVFPQIndex(path, "vec_id", "embedding").build(
-        corpus.filter(F.col("vec_id") < 40), m=4, ksub=4, n_lists=4
-    )
-    shutil.rmtree(os.path.join(path, "ids"))
-    meta_file = os.path.join(path, "_ann_meta.json")
-    meta = json.load(open(meta_file))
-    del meta["id_buckets"]
-    json.dump(meta, open(meta_file, "w"))
-    idx = similarity.IVFPQIndex.load(path)
-    assert idx.id_buckets is None
-    with _pytest.raises(ValueError, match="already indexed"):
-        idx.add_vectors(corpus.filter(F.col("vec_id") < 10))
-    idx.add_vectors(corpus.filter(F.col("vec_id").isin(50, 51)))
-    assert not os.path.isdir(os.path.join(path, "ids"))  # no partial sidecar
 
 
 def test_ivf_pq_index_compact_heals_dangling_sidecar_id(clustered_vectors, tmp_path):
@@ -881,7 +848,7 @@ def test_ivf_pq_index_compact_heals_dangling_sidecar_id(clustered_vectors, tmp_p
         )
         .write.mode("append")
         .partitionBy("__idb__")
-        .parquet(os.path.join(path, "ids"))
+        .parquet(idx._store.path("ids"))
     )
     # the replay fails loudly, never double-scores — and since the id is
     # DANGLING (sidecar only, no vector), the message points the operator
@@ -926,19 +893,19 @@ def test_ivf_pq_index_retrain_equals_fresh_build(clustered_vectors, tmp_path, sp
     )
     idx.add_vectors(corpus.filter(half == 1))
     idx.retrain(n_iters=1)
-    assert idx.generation == "g1"
+    assert idx.generation == 1
     got = sorted(map(tuple, idx.search(q, **args).collect()))
     assert got == want
-    # old root-layout generation NOT reclaimed at the flip (ADVICE r11
-    # medium → r12 contract): a cross-process reader that load()ed the
-    # pre-flip meta keeps resolving the old generation's parquet — it
-    # must still be fully readable. N−1 generations survive on disk.
-    assert os.path.isdir(os.path.join(path, "vectors"))
-    assert os.path.isdir(os.path.join(path, "codes"))
+    # the old generation is NOT reclaimed at the flip: a cross-process
+    # reader that load()ed the pre-flip pointer keeps resolving g0's
+    # parquet — it must still be fully readable. N−1 generations survive
+    # on disk.
+    assert os.path.isdir(os.path.join(path, "g0", "vectors"))
+    assert os.path.isdir(os.path.join(path, "g0", "codes"))
     old_reader = similarity.IVFPQIndex(path, "vec_id", "embedding")
     for k_ in ("m", "ksub", "n_lists", "sub_len"):
         setattr(old_reader, k_, getattr(idx, k_))
-    old_reader.generation = None  # the pre-flip pointer a reader held
+    old_reader._store.generation = 0  # the pre-flip pointer a reader held
     assert len(old_reader.search(q, **args).collect()) > 0
     ns = spark.newSession()
     idx2 = similarity.IVFPQIndex.load(path)
@@ -946,8 +913,8 @@ def test_ivf_pq_index_retrain_equals_fresh_build(clustered_vectors, tmp_path, sp
     assert sorted(map(tuple, idx2.search(q2, **args).collect())) == want
     # the NEXT retrain's orphan sweep reclaims the old generation
     idx.retrain(n_iters=1)
-    assert idx.generation == "g2"
-    assert not os.path.isdir(os.path.join(path, "vectors"))
+    assert idx.generation == 2
+    assert not os.path.isdir(os.path.join(path, "g0"))
     assert sorted(map(tuple, idx.search(q, **args).collect())) == want
 
 
@@ -1053,18 +1020,18 @@ def test_ivf_pq_index_compact_retrain_interleave(clustered_vectors, tmp_path, sp
     )
     a = sorted(map(tuple, idx.search(q, **args).collect()))
     idx.compact()
-    assert idx.generation == "g1"
+    assert idx.generation == 1
     assert sorted(map(tuple, idx.search(q, **args).collect())) == a
     idx.retrain(n_iters=1)
-    assert idx.generation == "g2" and idx.train_sample == 32
+    assert idx.generation == 2 and idx.train_sample == 32
     idx.remove_vectors(corpus.filter(F.col("vec_id") == 9).select("vec_id"))
     idx.compact()
-    assert idx.generation == "g3"
+    assert idx.generation == 3
     assert not any(
         r["neighbor_id"] == 9 for r in idx.search(q, **args).collect()
     )
     idx2 = similarity.IVFPQIndex.load(path)
-    assert idx2.generation == "g3" and idx2.train_sample == 32
+    assert idx2.generation == 3 and idx2.train_sample == 32
     assert os.path.isdir(os.path.join(path, "g2"))  # N−1 kept
     assert not os.path.isdir(os.path.join(path, "g1"))  # older swept
 
@@ -1089,16 +1056,16 @@ def test_ivf_pq_index_retrain_crash_windows(clustered_vectors, tmp_path):
     # simulate the crashed retrain: a half-written generation, no flip
     os.makedirs(os.path.join(path, "g1", "centroids"))
     idx2 = similarity.IVFPQIndex.load(path)
-    assert idx2.generation is None  # meta still points at the root layout
+    assert idx2.generation == 0  # the pointer still names g0
     assert sorted(map(tuple, idx2.search(q, **args).collect())) == before
     idx2.retrain(n_iters=1)  # sweeps the orphan, builds a REAL g1
-    assert idx2.generation == "g1"
+    assert idx2.generation == 1
     assert os.path.isdir(os.path.join(path, "g1", "codes"))
     got = sorted(map(tuple, idx2.search(q, **args).collect()))
     assert len(got) > 0
     # reshape: m=8 re-encodes with 8 subspaces under g2
     idx2.retrain(n_iters=1, m=8)
-    assert idx2.generation == "g2" and idx2.m == 8 and idx2.sub_len == 1
+    assert idx2.generation == 2 and idx2.m == 8 and idx2.sub_len == 1
     assert idx2.search(q, **args).count() > 0
 
 
@@ -1130,14 +1097,14 @@ def test_ivf_pq_index_auto_compact_cadence(clustered_vectors, tmp_path, spark):
     auto = similarity.IVFPQIndex(
         str(tmp_path / "auto"), "vec_id", "embedding", auto_compact_every=2
     ).build(corpus.filter(third == 0), **kw)
-    assert auto.generation is None  # build does not count as an absorb
+    assert auto.generation == 0  # build does not count as an absorb
     auto.add_vectors(corpus.filter(third == 1))
-    assert auto.generation is None  # 1st absorb: below cadence
+    assert auto.generation == 0  # 1st absorb: below cadence
     auto.add_vectors(corpus.filter(third == 2))
-    assert auto.generation == "g1"  # 2nd absorb triggered the compact
+    assert auto.generation == 1  # 2nd absorb triggered the compact
     assert auto._absorbs_since_compact == 0  # counter reset
     # compacted vectors/ holds ONE file (n_files=1 default), not 3 appends
-    vec_files = glob.glob(os.path.join(auto._art("vectors"), "*.parquet"))
+    vec_files = glob.glob(os.path.join(auto._store.path("vectors"), "*.parquet"))
     assert len(vec_files) == 1, vec_files
     args = dict(k=3, n_probe=2, shortlist=10)
     a = sorted(map(tuple, full.search(queries, **args).collect()))

@@ -594,8 +594,7 @@ def test_incremental_lsh_index_bucketed_mode(spark, tmp_path):
     finally:
         # always drop — a failed assertion must not leave the global
         # metastore entry (and its parquet) behind for later runs
-        spark.sql("DROP TABLE IF EXISTS lsh_idx_test")
-        spark.sql("DROP TABLE IF EXISTS lsh_idx_test__ids")
+        idx.drop_tables()
 
 
 def _bucketed_mode_body(spark, idx, rows, expect):
@@ -623,7 +622,7 @@ def _bucketed_mode_body(spark, idx, rows, expect):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("lsh_idx_test").alias("o").join(
+        j = spark.table(idx._table()).alias("o").join(
             delta.alias("a"),
             (F.col("a.__band__") == F.col("o.__band__"))
             & (F.col("a.__bucket__") == F.col("o.__bucket__")),
@@ -705,8 +704,7 @@ def test_incremental_lsh_index_refuses_nonempty_path(spark, tmp_path):
         idx2.add_docs(batch)
         assert not (victim / "data.txt").exists()
     finally:
-        spark.sql("DROP TABLE IF EXISTS lsh_idx_guard_test")
-        spark.sql("DROP TABLE IF EXISTS lsh_idx_guard_test__ids")
+        idx2.drop_tables()
 
 
 def test_incremental_survivorship_equals_batch_every_epoch(spark):
@@ -803,8 +801,7 @@ def test_incremental_lsh_index_resume_after_restart(spark, tmp_path):
                 index_table="lsh_no_such_table", index_path=path, resume=True,
             ).add_docs(docs.limit(1))
     finally:
-        spark.sql("DROP TABLE IF EXISTS lsh_resume_test")
-        spark.sql("DROP TABLE IF EXISTS lsh_resume_test__ids")
+        idx1.drop_tables()
 
 
 def test_minhash_lsh_edges_linear_on_hot_bucket(spark):
@@ -922,18 +919,17 @@ def test_incremental_lsh_index_resume_validates_params(spark, tmp_path):
                 "doc_id", "text", n=3, num_perm=12, bands=4, n_buckets=8,
                 index_table="lsh_meta_test", index_path=path, resume=True,
             ).add_docs(docs.limit(1))
-        # missing sidecar (pre-meta index) fails loudly too
+        # a missing pointer fails loudly too
         import os
 
-        os.remove(os.path.join(path, "_lsh_meta.json"))
+        os.remove(os.path.join(path, "_pointer.json"))
         with pytest.raises(ValueError, match="missing"):
             IncrementalLSHIndex(
                 "doc_id", "text", n=3, num_perm=12, bands=4,
                 index_table="lsh_meta_test", index_path=path, resume=True,
             ).add_docs(docs.limit(1))
     finally:
-        spark.sql("DROP TABLE IF EXISTS lsh_meta_test")
-        spark.sql("DROP TABLE IF EXISTS lsh_meta_test__ids")
+        IncrementalLSHIndex(index_table="lsh_meta_test", index_path=path).drop_tables()
 
 
 def test_incremental_survivorship_fractional_quality(spark):
@@ -1026,15 +1022,15 @@ def test_incremental_lsh_index_compact(spark, tmp_path):
             batch = [r for r in rows if r[0] % 4 == b]
             got |= {(r.id_a, r.id_b) for r in idx.add_docs(
                 spark.createDataFrame(batch, "doc_id long, text string")).collect()}
-        before = len(glob.glob(os.path.join(path, "*.parquet")))
+        before = len(glob.glob(os.path.join(idx._store.path("index"), "*.parquet")))
         idx.compact_index()
-        # r12: the compacted generation is a NEW table behind the stable
-        # pointer (crash-atomic flip); the old generation's files survive
-        # until the next compact/rebuild sweeps them
+        # the compacted generation is a NEW table behind the pointer
+        # (crash-atomic flip); the old generation's files survive until
+        # the next compact/rebuild sweeps them
         assert idx.generation == 1
-        after = len(glob.glob(os.path.join(idx._cur_path, "*.parquet")))
+        after = len(glob.glob(os.path.join(idx._store.path("index"), "*.parquet")))
         assert after < before and after <= 8, (before, after)
-        assert os.path.isfile(f"{path}__meta.json")
+        assert os.path.isfile(os.path.join(path, "_pointer.json"))
         # absorption continues correctly on the compacted generation
         batch = [r for r in rows if r[0] % 4 == 3]
         got |= {(r.id_a, r.id_b) for r in idx.add_docs(
@@ -1043,27 +1039,24 @@ def test_incremental_lsh_index_compact(spark, tmp_path):
         # exactly-once survives compaction (ids sidecar rewritten too)
         with pytest.raises(ValueError, match="already indexed"):
             idx.add_docs(spark.createDataFrame(rows[:1], "doc_id long, text string"))
-        # resume attaches to the compacted generation (meta rewritten)
+        # resume attaches to the compacted generation (pointer flipped)
         idx2 = IncrementalLSHIndex("doc_id", "text", resume=True, **kw)
         with pytest.raises(ValueError, match="already indexed"):
             idx2.add_docs(spark.createDataFrame(rows[:1], "doc_id long, text string"))
         # in-memory mode refuses
         with pytest.raises(ValueError, match="bucketed mode"):
             IncrementalLSHIndex("doc_id", "text").compact_index()
-        # a SECOND compact sweeps the pre-compact legacy generation AND a
-        # crashed compact's half-written orphan (pointer never flipped),
-        # and lands at g2; emissions and exactly-once survive again
-        os.makedirs(f"{path}__g2", exist_ok=True)  # the simulated crash
+        # a SECOND compact sweeps g0 AND a crashed compact's half-written
+        # orphan (pointer never flipped), and lands at g2; emissions and
+        # exactly-once survive again
+        os.makedirs(os.path.join(path, "g2"), exist_ok=True)  # the simulated crash
         idx.compact_index()
         assert idx.generation == 2
-        assert not spark.catalog.tableExists("lsh_compact_test")
+        assert not spark.catalog.tableExists("lsh_compact_test__g0")
         with pytest.raises(ValueError, match="already indexed"):
             idx.add_docs(spark.createDataFrame(rows[:1], "doc_id long, text string"))
     finally:
-        for t in ("lsh_compact_test", "lsh_compact_test__ids",
-                  "lsh_compact_test__g1", "lsh_compact_test__g1__ids",
-                  "lsh_compact_test__g2", "lsh_compact_test__g2__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx.drop_tables()
 
 
 def test_dsir_scores_rank_target_like_docs_higher(spark):
@@ -1289,15 +1282,13 @@ def test_lsh_index_remove_docs_bucketed_compact_lifecycle(spark, tmp_path):
         pre = sorted(map(tuple, near_dup_clusters(idx.pairs()).collect()))
         assert pre == want  # tombstone path, before any physical drop
         idx.compact_index()
-        # the new generation starts with no tombstone sidecar (r12: the
-        # pending tombstones belonged to the old generation and died
-        # with it at the pointer flip)
+        # the new generation starts with no tombstone sidecar (the
+        # pending tombstones stayed behind with the old generation)
         assert idx.generation == 1
-        assert not os.path.isdir(idx._tomb_path)
+        assert not os.path.isdir(idx._store.path("tombstones"))
         # the index table resolves through the catalog (bucket spec lives
-        # there); the partitioned ids sidecar is plain path parquet from
-        # the r13 optimization round
-        for src in (spark.table(idx._cur_table), spark.read.parquet(idx._ids_path)):
+        # there); the partitioned ids sidecar is plain path parquet
+        for src in (spark.table(idx._table()), spark.read.parquet(idx._store.path("ids"))):
             left = (
                 src.join(dele, F.col("__id__") == F.col("doc_id"), "semi")
                 .count()
@@ -1322,9 +1313,7 @@ def test_lsh_index_remove_docs_bucketed_compact_lifecycle(spark, tmp_path):
         got2 = sorted(map(tuple, near_dup_clusters(idx.pairs()).collect()))
         assert got2 == want2
     finally:
-        for t in ("lsh_del_test", "lsh_del_test__ids",
-                  "lsh_del_test__g1", "lsh_del_test__g1__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx.drop_tables()
 
 
 def test_lsh_index_remove_docs_guards(spark):
@@ -1384,18 +1373,17 @@ def test_lsh_index_tombstone_readd_refused_even_trusted(spark, tmp_path):
         # a STALE tombstone on the serving generation (id 4's rows are
         # already gone) still blocks the re-add loudly — and the next
         # compact's generation flip leaves it behind with the old
-        # generation, freeing the id (r12: the pending sidecar dies with
-        # the generation; no separate "clear" step to lose)
-        spark.createDataFrame([(4,)], "__id__ long").write.parquet(idx._tomb_path)
+        # generation, freeing the id (the pending sidecar stays with the
+        # generation; no separate "clear" step to lose)
+        spark.createDataFrame([(4,)], "__id__ long").write.parquet(
+            idx._store.path("tombstones")
+        )
         with _pytest.raises(ValueError, match="tombstoned"):
             idx.add_docs(docs.filter("doc_id = 4"))
         idx.compact_index()
         idx.add_docs(docs.filter("doc_id = 4"))  # freed id re-indexable
     finally:
-        for t in ("lsh_tomb_test", "lsh_tomb_test__ids",
-                  "lsh_tomb_test__g1", "lsh_tomb_test__g1__ids",
-                  "lsh_tomb_test__g2", "lsh_tomb_test__g2__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx.drop_tables()
 
 
 def test_dsir_fold_trajectory_equals_batch_at_every_epoch(spark):
@@ -1493,9 +1481,7 @@ def test_lsh_index_readd_with_new_content_after_compact(spark, tmp_path):
         assert want == {(1, 3)}  # fixture sanity
         assert got == want, got
     finally:
-        for t in ("lsh_readd_test", "lsh_readd_test__ids",
-                  "lsh_readd_test__g1", "lsh_readd_test__g1__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx.drop_tables()
 
 
 def test_lsh_index_remove_docs_on_resumed_incarnation(spark, tmp_path):
@@ -1532,8 +1518,7 @@ def test_lsh_index_remove_docs_on_resumed_incarnation(spark, tmp_path):
             with _pytest.raises(ValueError, match="already indexed|tombstoned"):
                 idx2.add_docs(docs.filter("doc_id = 4"))
         finally:
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}__ids")
+            idx1.drop_tables()
 
 
 def test_lsh_index_repair_edges_recovery(spark):
@@ -1575,11 +1560,9 @@ def test_lsh_index_repair_edges_recovery(spark):
 
 
 def test_lsh_index_adaptive_salting_equivalence(spark):
-    """salt_threshold (r12, VERDICT r11 #6): the index salts ONLY the
-    buckets whose batch membership exceeds the threshold — the operator
-    no longer pre-declares the degenerate bucket — and the resulting
-    clustering is identical across unsalted / manual-salted / adaptive,
-    through epochs AND through a removal's repair stars."""
+    """The index's emission modes — plain star (salt=False), salted with
+    an explicit salt_buckets, and the default salted star — cluster
+    identically, through epochs AND through a removal's repair stars."""
     from pyspark.sql import functions as F
 
     from storm_spark.functions.dedup import IncrementalLSHIndex, near_dup_clusters
@@ -1605,13 +1588,12 @@ def test_lsh_index_adaptive_salting_equivalence(spark):
             for r in near_dup_clusters(idx.pairs()).collect()
         }
 
-    plain = run(salt_threshold=None)  # opt out of the r13 default-on
-    manual = run(salt_buckets=4, salt_threshold=None)  # unconditional salt
-    auto = run(salt_threshold=5)  # hot group (14 > 5) salts, others don't
-    default = run()  # r13 default: adaptive at 100·bands (no-op here)
-    assert plain == manual == auto == default
+    plain = run(salt=False)
+    manual = run(salt_buckets=4, salt=False)
+    default = run()  # salted, 32 salt buckets
+    assert plain == manual == default
     # sanity: the boilerplate survivors cluster together under doc 1
-    assert {(i, 1) for i in range(1, 14)} <= auto
+    assert {(i, 1) for i in range(1, 14)} <= default
 
 
 def test_lsh_index_rebuild_parameter_migration(spark, tmp_path):
@@ -1652,9 +1634,9 @@ def test_lsh_index_rebuild_parameter_migration(spark, tmp_path):
         # the pointer exists; the new generation's tables serve; the OLD
         # generation's tables survive until the next rebuild (reader
         # continuity — the IVFPQIndex.retrain N−1 contract)
-        assert os.path.isfile(f"{path}__meta.json")
+        assert os.path.isfile(os.path.join(path, "_pointer.json"))
         assert spark.catalog.tableExists("lsh_reb_test__g1")
-        assert spark.catalog.tableExists("lsh_reb_test")  # old gen intact
+        assert spark.catalog.tableExists("lsh_reb_test__g0")  # old gen intact
         # tombstones are applied: the freed id is indexable again (its
         # whole text class was removed, so it has no collision partners
         # yet — the point is the add is ACCEPTED, not refused as
@@ -1681,7 +1663,7 @@ def test_lsh_index_rebuild_parameter_migration(spark, tmp_path):
         )
         with _pytest.raises(ValueError, match="do not match"):
             idx3.add_docs(docs.filter("doc_id = 999"))
-        # a SECOND rebuild sweeps the pre-migration legacy generation
+        # a SECOND rebuild sweeps the pre-migration generation g0
         surv2 = docs.filter("doc_id % 7 <> 3").unionByName(
             docs.filter("doc_id = 3")
         ).unionByName(
@@ -1692,18 +1674,13 @@ def test_lsh_index_rebuild_parameter_migration(spark, tmp_path):
         )
         idx.rebuild(surv2, bands=4)
         assert idx.generation == 2
-        assert not spark.catalog.tableExists("lsh_reb_test")
-        assert not os.path.isdir(path)
+        assert not spark.catalog.tableExists("lsh_reb_test__g0")
+        assert not os.path.isdir(os.path.join(path, "g0"))
         assert sorted_rows(idx.pairs()) == sorted_rows(
             minhash_lsh_pairs(surv2, "doc_id", "text", 3, 12, 4)
         )
     finally:
-        for t in (
-            "lsh_reb_test", "lsh_reb_test__ids",
-            "lsh_reb_test__g1", "lsh_reb_test__g1__ids",
-            "lsh_reb_test__g2", "lsh_reb_test__g2__ids",
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx.drop_tables()
 
 
 def test_lsh_index_rebuild_guards_and_crash_window(spark, tmp_path):
@@ -1748,14 +1725,14 @@ def test_lsh_index_rebuild_guards_and_crash_window(spark, tmp_path):
             idx.rebuild(docs, bands=5)
         # simulate the crashed rebuild: a half-written orphan generation,
         # pointer never flipped — invisible to the serving index
-        os.makedirs(f"{path}__g1", exist_ok=True)
+        os.makedirs(os.path.join(path, "g1"), exist_ok=True)
         idx.add_docs(
             spark.createDataFrame(
                 [(50, "the quick brown fox 1 jumps over the lazy dog 1")],
                 "doc_id long, text string",
             )
         )
-        assert idx.generation is None  # still the legacy layout
+        assert idx.generation == 0  # the orphan is invisible
         # the real rebuild sweeps the orphan and lands at g1
         full = docs.unionByName(
             spark.createDataFrame(
@@ -1770,11 +1747,7 @@ def test_lsh_index_rebuild_guards_and_crash_window(spark, tmp_path):
             for r in minhash_lsh_edges(full, "doc_id", "text", 3, 12, 4).collect()
         }
     finally:
-        for t in (
-            "lsh_rebg_test", "lsh_rebg_test__ids",
-            "lsh_rebg_test__g1", "lsh_rebg_test__g1__ids",
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx.drop_tables()
 
 
 def test_pretrain_reselection_trajectory_equals_batch_at_every_checkpoint(spark):
@@ -1862,65 +1835,13 @@ def _lsh_rows(n=30, mod=5):
     ]
 
 
-def test_lsh_index_legacy_ids_layout_migrates_on_compact(spark, tmp_path):
-    """A pre-r13 index (meta without id_buckets, unpartitioned bucketed
-    __ids sidecar) keeps appending in the legacy layout after resume —
-    mixing layouts in one table would fail the write — and MIGRATES to
-    the partitioned layout at compact_index(); exactly-once holds
-    across every step (VERDICT r12 #2's migration clause)."""
-    import json
-    import os
-
-    from storm_spark.functions.dedup import IncrementalLSHIndex
-
-    rows = _lsh_rows()
-    path = str(tmp_path / "legmig")
-    kw = dict(n=3, num_perm=12, bands=4, n_buckets=8,
-              index_table="lsh_legmig_test", index_path=path)
-    try:
-        idx = IncrementalLSHIndex("doc_id", "text", **kw)
-        idx._ids_partitioned = False  # simulate a pre-r13 writer
-        idx.add_docs(_mk_docs(spark, rows[:10])).collect()
-        with open(os.path.join(path, "_lsh_meta.json")) as fh:
-            assert "id_buckets" not in json.load(fh)  # legacy meta shape
-        assert "__idb__" not in spark.table("lsh_legmig_test__ids").columns
-        # resume adopts the legacy layout from the meta and keeps it
-        idx2 = IncrementalLSHIndex("doc_id", "text", resume=True, **kw)
-        idx2.add_docs(_mk_docs(spark, rows[10:20])).collect()
-        assert idx2._ids_partitioned is False
-        with pytest.raises(ValueError, match="already indexed"):
-            idx2.add_docs(_mk_docs(spark, rows[:1]))
-        # compact migrates: partitioned sidecar, meta records id_buckets
-        idx2.compact_index()
-        assert idx2._ids_partitioned is True
-        # path-based read: the migrated partitioned sidecar has no
-        # catalog entry (r13 optimization round — see _write_ids)
-        assert "__idb__" in spark.read.parquet(idx2._ids_path).columns
-        with open(f"{path}__meta.json") as fh:
-            assert json.load(fh)["id_buckets"] == idx2.id_buckets
-        # exactly-once survives the migration, both pre- and post-compact ids
-        with pytest.raises(ValueError, match="already indexed"):
-            idx2.add_docs(_mk_docs(spark, rows[5:6]))
-        idx2.add_docs(_mk_docs(spark, rows[20:])).collect()
-        with pytest.raises(ValueError, match="already indexed"):
-            idx2.add_docs(_mk_docs(spark, rows[25:26]))
-        # a fresh resume lands on the migrated layout
-        idx3 = IncrementalLSHIndex("doc_id", "text", resume=True, **kw)
-        idx3._attach_if_resuming(spark)
-        assert idx3._ids_partitioned is True
-    finally:
-        for t in ("lsh_legmig_test", "lsh_legmig_test__ids",
-                  "lsh_legmig_test__g1", "lsh_legmig_test__g1__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 def test_lsh_index_fresh_start_clears_generations_and_pointer(spark, tmp_path):
-    """ADVICE r12 medium: a fresh index at a path whose PRIOR index was
-    compacted away from the legacy root (only `__gN` tables + the
-    pointer sidecar remain) must refuse without overwrite_index=True —
-    and WITH it must remove the pointer and every generation, so a
-    later resume=True incarnation attaches to the fresh index, never to
-    the stale pre-wipe generation (the phantom-pairs failure)."""
+    """A fresh index at a path whose PRIOR index was compacted (its
+    pointer names g2, g1 is kept for readers) must refuse without
+    overwrite_index=True — and WITH it must remove the pointer and every
+    generation, so a later resume=True incarnation attaches to the fresh
+    index, never to the stale pre-wipe generation (the phantom-pairs
+    failure)."""
     import os
 
     from storm_spark.functions.dedup import IncrementalLSHIndex
@@ -1933,10 +1854,8 @@ def test_lsh_index_fresh_start_clears_generations_and_pointer(spark, tmp_path):
         old = IncrementalLSHIndex("doc_id", "text", **kw)
         old.add_docs(_mk_docs(spark, rows[:10])).collect()
         old.compact_index()
-        old.compact_index()  # second compact sweeps the legacy root
-        assert not os.path.isdir(path) and os.path.isfile(f"{path}__meta.json")
-        # the legacy root is EMPTY, but the pointer + __g2 remain: the
-        # old guard (legacy-root-only) would silently proceed here
+        old.compact_index()
+        assert old._store.generations() == {1, 2}
         fresh = IncrementalLSHIndex("doc_id", "text", **kw)
         with pytest.raises(ValueError, match="prior index"):
             fresh.add_docs(_mk_docs(spark, rows[10:20])).collect()
@@ -1945,28 +1864,24 @@ def test_lsh_index_fresh_start_clears_generations_and_pointer(spark, tmp_path):
             "doc_id", "text", overwrite_index=True, **kw
         )
         fresh2.add_docs(_mk_docs(spark, rows[10:20])).collect()
-        assert not os.path.isfile(f"{path}__meta.json")
-        assert not os.path.isdir(f"{path}__g2")
+        assert fresh2.generation == 0 and fresh2._store.generations() == {0}
+        assert not spark.catalog.tableExists("lsh_fresh_test__g2")
         # a resume attaches to the FRESH index: a doc only the stale
         # pre-wipe generation knew is accepted (it would raise "already
-        # indexed" if the resume had chased the stale pointer to __g2)
+        # indexed" if the resume had chased the stale pointer to g2)
         res = IncrementalLSHIndex("doc_id", "text", resume=True, **kw)
         res.add_docs(_mk_docs(spark, rows[:5])).collect()
         with pytest.raises(ValueError, match="already indexed"):
             res.add_docs(_mk_docs(spark, rows[10:11]))
     finally:
-        for t in ("lsh_fresh_test", "lsh_fresh_test__ids",
-                  "lsh_fresh_test__g1", "lsh_fresh_test__g1__ids",
-                  "lsh_fresh_test__g2", "lsh_fresh_test__g2__ids",
-                  "lsh_fresh_test__g3", "lsh_fresh_test__g3__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        old.drop_tables()
 
 
 def test_lsh_orphan_sweep_catches_suffix_only_generations(spark, tmp_path):
-    """ADVICE r12 low: rebuild writes `__gN__ids` BEFORE `__gN`, so a
-    crash between the two leaves a suffix-ONLY orphan; the sweep must
-    discover the generation from the suffixed dir alone (a `__gN`-dirs
-    scan would leak it permanently once the pointer advances past N)."""
+    """A maintenance op that crashed after writing only part of its
+    generation (here: just the ids sidecar) leaves a partial orphan; the
+    next op's sweep must remove it whatever it holds (it would leak
+    permanently once the pointer advances past N)."""
     import os
 
     from storm_spark.functions.dedup import IncrementalLSHIndex
@@ -1978,21 +1893,20 @@ def test_lsh_orphan_sweep_catches_suffix_only_generations(spark, tmp_path):
     try:
         idx = IncrementalLSHIndex("doc_id", "text", **kw)
         idx.add_docs(_mk_docs(spark, rows[:10])).collect()
-        # simulated crash: a rebuild died after its FIRST write — the
-        # __g3__ids dir exists, __g3 itself never got written (a number
-        # the upcoming compact won't reuse, so "swept" is unambiguous)
-        os.makedirs(f"{path}__g3__ids", exist_ok=True)
+        # simulated crash: a rebuild died after its ids write — g3 holds
+        # only ids (a number the upcoming compact won't reuse, so "swept"
+        # is unambiguous)
+        os.makedirs(os.path.join(path, "g3", "ids"), exist_ok=True)
         idx.compact_index()  # sweeps, then compacts into a fresh gen
-        assert not os.path.isdir(f"{path}__g3__ids")
-        # the compact did not collide with the orphan's number space:
-        # whatever generation it chose is the pointer's and is complete
-        assert os.path.isdir(idx._cur_path) and os.path.isdir(idx._ids_path)
+        assert not os.path.isdir(os.path.join(path, "g3"))
+        # whatever generation the compact chose is the pointer's and is
+        # complete
+        assert os.path.isdir(idx._store.path("index"))
+        assert os.path.isdir(idx._store.path("ids"))
         with pytest.raises(ValueError, match="already indexed"):
             idx.add_docs(_mk_docs(spark, rows[:1]))
     finally:
-        for t in ("lsh_orph_test", "lsh_orph_test__ids",
-                  "lsh_orph_test__g1", "lsh_orph_test__g1__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx.drop_tables()
 
 
 def test_lsh_compact_n_files_knob(spark, tmp_path):
@@ -2022,32 +1936,27 @@ def test_lsh_compact_n_files_knob(spark, tmp_path):
         idx.compact_index()  # k=1: exactly one file per non-empty bucket
         per = collections.Counter(
             re.search(r"_(\d{5})\.c", os.path.basename(f)).group(1)
-            for f in glob.glob(os.path.join(idx._cur_path, "*.parquet"))
+            for f in glob.glob(os.path.join(idx._store.path("index"), "*.parquet"))
         )
         assert per and max(per.values()) == 1, per
-        n_rows = spark.read.parquet(idx._cur_path).count()
+        n_rows = spark.read.parquet(idx._store.path("index")).count()
         idx.compact_index(n_files=3)
         per3 = collections.Counter(
             re.search(r"_(\d{5})\.c", os.path.basename(f)).group(1)
-            for f in glob.glob(os.path.join(idx._cur_path, "*.parquet"))
+            for f in glob.glob(os.path.join(idx._store.path("index"), "*.parquet"))
         )
         assert max(per3.values()) <= 3, per3
-        assert spark.read.parquet(idx._cur_path).count() == n_rows
+        assert spark.read.parquet(idx._store.path("index")).count() == n_rows
         with pytest.raises(ValueError, match="already indexed"):
             idx.add_docs(_mk_docs(spark, rows[:1]))
     finally:
-        for t in ("lsh_nfiles_test", "lsh_nfiles_test__ids",
-                  "lsh_nfiles_test__g1", "lsh_nfiles_test__g1__ids",
-                  "lsh_nfiles_test__g2", "lsh_nfiles_test__g2__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx.drop_tables()
 
 
 def test_adaptive_salting_default_on(spark):
-    """r13 (VERDICT r12 #5): adaptive salting defaults ON at threshold
-    100·bands — a degenerate boilerplate bucket is straggler-safe out of
-    the box — while below-threshold corpora get the plain star verbatim
-    (identical emission rows, the measured-zero no-op). None opts out;
-    rebuild() re-resolves the auto threshold when bands change."""
+    """Salting is on by default: the index and minhash_lsh_edges emit the
+    salted star unless salt=False; below a salt partition's size the
+    salted emission is the plain star row-for-row."""
     from storm_spark.functions.dedup import IncrementalLSHIndex, minhash_lsh_edges
 
     rows = [
@@ -2055,21 +1964,13 @@ def test_adaptive_salting_default_on(spark):
         for i in range(20)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    # below threshold: the default emission IS the plain star, row-for-row
-    auto_rows = sorted_rows(minhash_lsh_edges(docs, "doc_id", "text", bands=4))
+    salted_rows = sorted_rows(minhash_lsh_edges(docs, "doc_id", "text", bands=4))
     plain_rows = sorted_rows(
-        minhash_lsh_edges(docs, "doc_id", "text", bands=4, salt_threshold=None)
+        minhash_lsh_edges(docs, "doc_id", "text", bands=4, salt=False)
     )
-    assert auto_rows == plain_rows
-    idx = IncrementalLSHIndex("doc_id", "text", bands=4)
-    assert idx._salt_auto and idx.salt_threshold == 400
-    assert IncrementalLSHIndex("doc_id", "text", bands=8).salt_threshold == 800
-    assert IncrementalLSHIndex(
-        "doc_id", "text", salt_threshold=None
-    ).salt_threshold is None
-    assert IncrementalLSHIndex(
-        "doc_id", "text", salt_threshold=7
-    ).salt_threshold == 7
+    assert salted_rows == plain_rows
+    assert IncrementalLSHIndex("doc_id", "text").salt is True
+    assert IncrementalLSHIndex("doc_id", "text", salt=False).salt is False
 
 
 def test_lsh_index_auto_compact_cadence(spark, tmp_path):
@@ -2104,7 +2005,7 @@ def test_lsh_index_auto_compact_cadence(spark, tmp_path):
         got = set()
         got |= {(r.id_a, r.id_b) for r in idx.add_docs(
             _mk_docs(spark, [r for r in rows if r[0] % 3 == 0])).collect()}
-        assert idx.generation is None  # 1st absorb: below cadence
+        assert idx.generation == 0  # 1st absorb: below cadence
         got |= {(r.id_a, r.id_b) for r in idx.add_docs(
             _mk_docs(spark, [r for r in rows if r[0] % 3 == 1])).collect()}
         assert idx.generation == 1  # 2nd absorb triggered the compact
@@ -2117,9 +2018,9 @@ def test_lsh_index_auto_compact_cadence(spark, tmp_path):
         got |= {(r.id_a, r.id_b) for r in idx.add_docs(
             _mk_docs(spark, [(100, "a brand new unique document")])).collect()}
         assert idx.generation == 2  # 4th absorb: second auto compact
-        assert not os.path.isdir(f"{path}__g2__tombstones")  # applied
+        assert not os.path.isdir(os.path.join(path, "g2", "tombstones"))  # applied
         # one file per non-empty bucket in the live generation
-        files = glob.glob(os.path.join(idx._cur_path, "*.parquet"))
+        files = glob.glob(os.path.join(idx._store.path("index"), "*.parquet"))
         assert 0 < len(files) <= 8, files
         # the freed id is indexable again (5th absorb, below cadence)
         idx.add_docs(_mk_docs(spark, [(0, "recycled id new content")])).collect()
@@ -2136,11 +2037,7 @@ def test_lsh_index_auto_compact_cadence(spark, tmp_path):
         got_cl = near_dup_clusters(idx.pairs())
         assert sorted_rows(got_cl) == sorted_rows(want)
     finally:
-        for t in ("lsh_autoc_test", "lsh_autoc_test__ids",
-                  "lsh_autoc_test__g1", "lsh_autoc_test__g1__ids",
-                  "lsh_autoc_test__g2", "lsh_autoc_test__g2__ids",
-                  "lsh_autoc_test__g3", "lsh_autoc_test__g3__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx.drop_tables()
 
 
 def test_lsh_index_dangling_sidecar_diagnosed_and_healed(spark, tmp_path):
@@ -2183,9 +2080,7 @@ def test_lsh_index_dangling_sidecar_diagnosed_and_healed(spark, tmp_path):
         with _pytest.raises(ValueError, match="already indexed"):
             idx.add_docs(docs.filter("doc_id < 10"))
     finally:
-        for t in ("lsh_dangling_test", "lsh_dangling_test__ids",
-                  "lsh_dangling_test__g1", "lsh_dangling_test__g1__ids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        idx.drop_tables()
 
 
 def test_bpe_train_rematerialization_cadence_is_invisible(spark):

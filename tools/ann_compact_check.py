@@ -68,10 +68,10 @@ def main():
         probe()  # warmup on the rewritten generation
         post_runs = [probe() for _ in range(3)]
         post_times, post_rows = [t for t, _ in post_runs], post_runs[-1][1]
-        # r12: compact lands in a NEW generation dir behind the meta flip
+        # compact lands in a NEW generation dir behind the pointer flip
         # and the old files survive until the next sweep — count only the
         # serving generation's files
-        post_files = count_files(os.path.join(path, idx.generation or ""))
+        post_files = count_files(os.path.join(path, f"g{idx.generation}"))
 
         assert pre_rows == post_rows, "compact changed the answer"
         print(

@@ -14,11 +14,14 @@ from __future__ import annotations
 import argparse
 import hashlib
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file belongs to: perfbench imports this module, and a
+# benchmark run must import the storm_spark package of its own checkout
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

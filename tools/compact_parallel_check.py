@@ -105,7 +105,7 @@ def main() -> None:
         finally:
             DataFrame.repartition = orig_rep
         files = len(
-            glob.glob(os.path.join(idx._cur_path, "part-*.parquet"))
+            glob.glob(os.path.join(idx._store.path("index"), "part-*.parquet"))
         )
         rows.append((mode, dt, files))
         print(

@@ -42,10 +42,6 @@ def main() -> None:
     ap.add_argument("--epochs", type=int, default=8)
     ap.add_argument("--modes", default="pairs,edges,edges_salted")
     ap.add_argument("--salt", type=int, default=32)
-    ap.add_argument(
-        "--threshold", type=int, default=65536,
-        help="edges_auto: salt only buckets above this batch membership",
-    )
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -78,7 +74,7 @@ def main() -> None:
 
     finals = {}
     modes = args.modes.split(",")
-    valid = ("pairs", "edges", "edges_salted", "edges_auto")
+    valid = ("pairs", "edges", "edges_salted")
     unknown = [m for m in modes if m not in valid]
     if unknown:
         raise SystemExit(f"unknown --modes entries {unknown!r} — valid: "
@@ -86,15 +82,11 @@ def main() -> None:
                          "silently measured as unsalted edges)")
     for mode in modes:
         emit = "pairs" if mode == "pairs" else "edges"
-        salt = args.salt if mode in ("edges_salted", "edges_auto") else None
-        # edges_auto (r12, VERDICT r11 #6): the operator does NOT
-        # pre-declare the degenerate bucket — absorb observes per-bucket
-        # membership and salts only buckets above --threshold
-        thr = args.threshold if mode == "edges_auto" else None
+        salted = mode == "edges_salted"
         idx = IncrementalLSHIndex(
             "doc_id", "text", n=3, num_perm=12, bands=4,
-            emit=emit, enforce_unique=False, salt_buckets=salt,
-            salt_threshold=thr,
+            emit=emit, enforce_unique=False,
+            salt_buckets=args.salt if salted else None, salt=salted,
         )
         print(f"--- mode={mode} ---")
         for e in range(args.epochs):

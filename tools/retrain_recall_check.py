@@ -103,7 +103,7 @@ def main() -> None:
         ) / len(exact)
         # scan volume: avg probed-cell rows per query (cell sizes from the
         # codes table; probe ranking mirrors search's cosine-desc shape)
-        codes = spark.read.parquet(idx._art("codes")).select(
+        codes = spark.read.parquet(idx._store.path("codes")).select(
             "neighbor_id", "__cell__"
         ).distinct()
         sizes = {
@@ -111,7 +111,7 @@ def main() -> None:
             for r in codes.groupBy("__cell__").agg(F.count(F.lit(1)).alias("c")).collect()
         }
         crows = [(r["cent_id"], list(r["__cent__"]))
-                 for r in spark.read.parquet(idx._art("centroids")).collect()]
+                 for r in spark.read.parquet(idx._store.path("centroids")).collect()]
         qrows = [(r.vec_id, list(r.embedding)) for r in queries.collect()]
 
         def cos(a, b):
