@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from storm_spark.functions.text import fingerprint, ngrams_from_tokens, tokens, word_ngrams
 from storm_spark.session import bounded_persist
-from storm_spark.state.generations import GenerationStore
+from storm_spark.state.generations import GenerationStore, check_adds, check_deletes
 
 #: sentinel distinguishing "caller left the cap at its default" from an
 #: explicit ``max_shingle_df=1000`` — only the former warns.
@@ -1114,13 +1114,10 @@ class IncrementalLSHIndex:
     tests and by the `streaming_dedup_pipeline` gate's batch oracle).
 
     Contract: each doc id arrives EXACTLY once across the stream (the
-    crawl-frontier contract). :meth:`add_docs` enforces it COMPLETELY
-    and loudly (skip with ``enforce_unique=False`` for a trusted feed):
-    a duplicate id within the batch raises, and a re-sent id — a
-    foreachBatch replay (at-least-once), or a re-crawl with CHANGED
-    text — is caught by an id semi-join against the stored ids
-    (collision-based detection alone would miss the changed-text case);
-    run the exact-dedup step upstream. Scale: per epoch ONE
+    crawl-frontier contract) — the id contract of
+    :mod:`storm_spark.state.generations`, checked on ids, not collisions
+    (a re-crawl with CHANGED text would not self-collide), in both storage
+    modes; run the exact-dedup step upstream. Scale: per epoch ONE
     bucket-keyed join of |Δ| signature rows against the index plus the
     within-batch bucket self-collision — never index × index; the index
     itself grows by |Δ|·bands rows per epoch. ``emit="pairs"`` (default)
@@ -1135,18 +1132,18 @@ class IncrementalLSHIndex:
     re-shuffles into each epoch's join (fine for gates; measured in
     SCALE.md). With ``index_table``/``index_path`` it persists in a
     :class:`~storm_spark.state.generations.GenerationStore` rooted at
-    ``index_path`` (the layout and its durability argument are stated
-    there, once): generation N holds ``index/`` — the band-bucket rows
-    as a BUCKETED parquet table registered as ``{index_table}__g{N}``,
-    hash-partitioned on the join key so the index side of the epoch
-    join scans shuffle-free (zero Exchange, plan-asserted) — plus the
-    shared ``ids`` sidecar that serves the exactly-once check at
-    1/bands of the index rows, and pending ``tombstones``. The pointer
-    records the structural parameters (``_META_KEYS``) and
-    ``id_buckets``; ``resume=True`` in a new driver incarnation attaches
-    through it, refusing any parameter mismatch (it would silently mix
-    incompatible band buckets), and keeps enforcing the exactly-once
-    contract against the stored ids.
+    ``index_path`` (the layout, its durability argument and the id
+    contract are stated there, once): generation N holds ``index/`` — the
+    band-bucket rows as a BUCKETED parquet table registered as
+    ``{index_table}__g{N}``, hash-partitioned on the join key so the index
+    side of the epoch join scans shuffle-free (zero Exchange,
+    plan-asserted) — plus the shared ``ids`` sidecar that serves the
+    exactly-once check at 1/bands of the index rows, and pending
+    ``tombstones``. The pointer records the structural parameters
+    (``_META_KEYS``) and ``id_buckets``; ``resume=True`` in a new driver
+    incarnation attaches through it, refusing any parameter mismatch (it
+    would silently mix incompatible band buckets), and keeps enforcing the
+    exactly-once contract against the stored ids.
 
     Deletion: :meth:`remove_docs` tombstones ids in O(|Δ|) (pairs() and
     the collision join anti-join them out; edges mode emits repair stars
@@ -1302,21 +1299,6 @@ class IncrementalLSHIndex:
             return self._index
         return None if self.generation is None else spark.table(self._table())
 
-    def _write_ids(
-        self, ids: DataFrame, mode: str, generation: int | None = None
-    ) -> None:
-        self.id_buckets = self._store.write_ids(
-            ids, "__id__", self.id_buckets, mode, generation
-        )
-
-    def _stored_ids(self, spark, probe: DataFrame | None = None) -> DataFrame:
-        """Stored doc ids (``__id__`` rows) of the bucketed index; with
-        ``probe`` pruned to the probe's ids-sidecar partitions (see
-        ``GenerationStore.read_ids``). Callers needing the FULL live id
-        set (the emptied-index guard, rebuild's coverage check) pass no
-        probe."""
-        return self._store.read_ids(spark, "__id__", self.id_buckets, probe)
-
     def _write_index(
         self, rows: DataFrame, mode: str, generation: int | None = None,
         n_buckets: int | None = None,
@@ -1339,11 +1321,13 @@ class IncrementalLSHIndex:
 
         gen = self._store.next_generation()
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fi = pool.submit(self._write_ids, ids, "overwrite", gen)
+            fi = pool.submit(
+                self._store.write_ids, ids, "__id__", self.id_buckets, "overwrite", gen
+            )
             ft = pool.submit(
                 self._write_index, rows, "overwrite", gen, params["n_buckets"]
             )
-            fi.result()
+            self.id_buckets = fi.result()
             ft.result()
         self._store.flip(gen, {**params, "id_buckets": self.id_buckets})
 
@@ -1353,80 +1337,6 @@ class IncrementalLSHIndex:
         generation kept for reader continuity — files and tables."""
         for g in self._store.sweep():
             spark.sql(f"DROP TABLE IF EXISTS {self._table(g)}")
-
-    def _check_exactly_once(self, batch: DataFrame, nb: DataFrame) -> None:
-        """Loud exactly-once enforcement (foreachBatch is at-least-once;
-        upstream re-crawls can re-send an id with CHANGED text, which
-        would NOT self-collide — so check ids directly, not collisions).
-        Within-batch duplicates must be checked on the RAW batch: the
-        signature step groupBys on id, silently blending a duplicate
-        pair's shingles into one (wrong) signature row. Skipped entirely
-        under ``enforce_unique=False`` (a trusted exactly-once feed —
-        saves the blocking driver round-trip per epoch)."""
-        dups = (
-            batch.groupBy(F.col(self.id_col).alias("__id__"))
-            .count()
-            .filter(F.col("count") > 1)
-            .select("__id__", F.lit("dup").alias("__why__"))
-        )
-        # COMPLETE re-sent-id detection: semi-join the batch's ids (its
-        # band-0 slice — every id exactly once) against the stored ids —
-        # the bucketed mode's ids sidecar pruned to the batch's partitions,
-        # or the in-memory index's band-0 rows
-        spark = batch.sparkSession
-        b0 = nb.filter(F.col("__band__") == 0).select("__id__")
-        if self.generation is not None:
-            stored_ids = self._stored_ids(spark, probe=b0)
-        elif self._index is not None:
-            stored_ids = self._index.filter(F.col("__band__") == 0).select("__id__")
-        else:
-            stored_ids = None
-        # ONE driver action answers both guards: the probes union into a
-        # tagged frame whose lexically-first tag ('dup' < 'resent') keeps
-        # the check order, so error precedence is unchanged
-        bad_frames = dups
-        if stored_ids is not None:
-            bad_frames = bad_frames.unionByName(
-                b0.join(stored_ids, "__id__", "semi").select(
-                    "__id__", F.lit("resent").alias("__why__")
-                )
-            )
-        bad = bad_frames.orderBy("__why__").head(1)
-        if bad:
-            if bad[0]["__why__"] == "dup":
-                raise ValueError(
-                    f"doc id {bad[0]['__id__']!r} appears more than once in "
-                    "this batch — each id must arrive exactly once; run exact "
-                    "dedup upstream"
-                )
-            # distinguish a true replay from a DANGLING sidecar id: an
-            # absorb interrupted between its ids append and its index
-            # append leaves the id in the sidecar with no band-bucket rows
-            # behind it — nothing is double-indexed, and the remedy is
-            # compact_index() (which re-derives the sidecar from the
-            # index's band-0 rows), then replaying the batch. One point
-            # lookup, failing path only.
-            rid = bad[0]["__id__"]
-            if self.generation is not None:
-                in_index = (
-                    self._stored_index(spark)
-                    .filter(F.col("__id__") == F.lit(rid))
-                    .head(1)
-                )
-                if not in_index:
-                    raise ValueError(
-                        f"doc id {rid!r} is in the ids sidecar but has no "
-                        "index rows — a dangling entry from an absorb "
-                        "interrupted between the sidecar and index appends; "
-                        "run compact_index() to heal the sidecar, then "
-                        "replay this batch"
-                    )
-            raise ValueError(
-                f"doc id {rid!r} was already indexed — "
-                "each id must arrive exactly once (replayed batch or "
-                "re-sent doc?); run exact dedup upstream or dedup the "
-                "replay before add_docs"
-            )
 
     def _tombstones(self, spark) -> DataFrame | None:
         """PENDING tombstoned ids (``__id__`` rows) awaiting physical
@@ -1523,13 +1433,9 @@ class IncrementalLSHIndex:
         surviving pair's endpoints both survive) and the returned frame
         is empty.
 
-        Loud-failure contract (the class convention): a duplicate id
-        within the batch, an id never indexed, or an id already
-        tombstoned each raise; tombstoning every remaining doc is
-        refused (an emptied index is a rebuild, not maintenance). A
-        tombstoned id stays RESERVED — :meth:`add_docs` refuses it even
-        with ``enforce_unique=False`` — until :meth:`compact_index`
-        physically drops it."""
+        The delete guards and the tombstone reservation are the id
+        contract of :mod:`storm_spark.state.generations`; ``remove_docs``
+        before any absorb raises."""
         from concurrent.futures import ThreadPoolExecutor
 
         spark = ids.sparkSession
@@ -1539,83 +1445,26 @@ class IncrementalLSHIndex:
         # several separate driver actions against this frame, and the
         # caller's lineage may be an expensive plan
         dele = ids.select(F.col(col).alias("__id__")).localCheckpoint()
-        # an EMPTY delete batch would pass every guard below vacuously and
-        # permanently materialize the tombstone sidecar, so every later
-        # add_docs pays the tombstone semi-join for nothing — refuse it.
-        # ONE aggregate job answers both the empty and the duplicate guard;
-        # the offending id is re-fetched only on the failure path.
-        stats = (
-            dele.groupBy("__id__")
-            .count()
-            .agg(F.count(F.lit(1)).alias("n_ids"), F.max("count").alias("max_n"))
-            .collect()[0]
-        )
-        if stats["n_ids"] == 0:
-            raise ValueError(
-                "empty delete batch — nothing to remove (a confused caller; "
-                "the loud-failure convention refuses no-op deletes)"
-            )
-        if stats["max_n"] > 1:
-            dup = dele.groupBy("__id__").count().filter(F.col("count") > 1).head(1)
-            raise ValueError(
-                f"doc id {dup[0]['__id__']!r} appears more than once in this "
-                "delete batch — each id may be deleted at most once"
-            )
         if self.generation is not None:
-            # the is-it-indexed guard prunes to dele's partitions; the
-            # emptied-index guard needs the FULL live id set
-            stored_ids = self._stored_ids(spark, probe=dele)
-            stored_full = self._stored_ids(spark)
+            stored_probe = self._store.read_ids(spark, "__id__", self.id_buckets, dele)
+            stored_full = self._store.read_ids(spark, "__id__", self.id_buckets)
         elif self._index is not None:
-            stored_ids = self._index.filter(F.col("__band__") == 0).select("__id__")
-            stored_full = stored_ids
+            stored_probe = stored_full = (
+                self._index.filter(F.col("__band__") == 0).select("__id__")
+            )
         else:
             raise ValueError("no documents indexed yet")
         prior = self._tombstones(spark)
-        live = stored_full
-        if prior is not None:
-            live = stored_full.join(F.broadcast(prior), "__id__", "anti")
-        # The remaining guards and the repair derivation are independent
-        # side-effect-free reads — run them concurrently and await in the
-        # original order so error precedence is unchanged; nothing durable
-        # happens until the tombstone append below.
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            f_missing = pool.submit(
-                lambda: dele.join(stored_ids, "__id__", "anti").head(1)
-            )
-            f_twice = (
-                pool.submit(
-                    lambda: dele.join(F.broadcast(prior), "__id__", "semi").head(1)
-                )
-                if prior is not None
-                else None
-            )
-            f_emptied = pool.submit(lambda: live.join(dele, "__id__", "anti").isEmpty())
+        # the repair derivation is a side-effect-free read: it overlaps the
+        # guards; nothing durable happens until the tombstone append below
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            f_repair = None
             if self.emit == "edges":
                 all_tombs = dele if prior is None else dele.unionByName(prior)
                 f_repair = pool.submit(
                     lambda: self._repair_stars(spark, dele, all_tombs).localCheckpoint()
                 )
-            else:
-                f_repair = None
-            missing = f_missing.result()
-            if missing:
-                raise ValueError(
-                    f"doc id {missing[0]['__id__']!r} is not indexed — deleting "
-                    "an unknown id indicates a confused caller"
-                )
-            if f_twice is not None:
-                twice = f_twice.result()
-                if twice:
-                    raise ValueError(
-                        f"doc id {twice[0]['__id__']!r} is already tombstoned — "
-                        "deleting it twice indicates a confused caller"
-                    )
-            if f_emptied.result():
-                raise ValueError(
-                    "this delete would tombstone every remaining indexed doc — "
-                    "rebuild the index instead of emptying it"
-                )
+            check_deletes(dele, "__id__", stored_probe, stored_full, prior)
             # repair edges are computed BEFORE the durable tombstone append
             # (a crash before the append means the removal never happened)
             if f_repair is not None:
@@ -1725,6 +1574,7 @@ class IncrementalLSHIndex:
         diagnosable dangling id, healed by :meth:`compact_index`), while
         the opposite order would let the replay silently double-index."""
         from concurrent.futures import ThreadPoolExecutor
+        from functools import partial
 
         spark = batch.sparkSession
         self._attach_if_resuming(spark)
@@ -1732,11 +1582,6 @@ class IncrementalLSHIndex:
             batch, self.id_col, self.text_col, self.n, self.num_perm, self.bands
         ).localCheckpoint()
         b0 = nb.filter(F.col("__band__") == 0).select("__id__")
-        # tombstone-reservation check runs UNCONDITIONALLY (even with
-        # enforce_unique=False — the IVFPQIndex convention): a re-added
-        # tombstoned id's rows would be anti-joined out of pairs() and
-        # physically deleted by the next compact_index() — silent data
-        # loss, not a dedup question.
         tomb = self._tombstones(spark)
         stored = self._stored_index(spark)
         if stored is not None and tomb is not None:
@@ -1777,39 +1622,34 @@ class IncrementalLSHIndex:
                     F.greatest(F.col("__root__"), F.col("__smin__")).alias("id_b"),
                 )
             )
-        # The pre-append driver round-trips — the exactly-once check, the
-        # tombstone-reservation probe, and the emission's materialization
-        # — are independent reads of checkpointed frames: run them
-        # concurrently and await the guards in the original order. Nothing
-        # is written until every guard has passed.
-        with ThreadPoolExecutor(max_workers=3) as pool:
+        # the guards run on the RAW batch ids: the signature step groupBys
+        # on id, blending a duplicate pair's shingles into one row
+        ids = batch.select(F.col(self.id_col).alias("__id__"))
+        stored_ids = rows = None
+        if self.generation is not None:
+            stored_ids = partial(
+                self._store.read_ids, spark, "__id__", self.id_buckets, ids
+            )
+            rows = partial(spark.table, self._table())
+        elif self._index is not None:
+            band0 = self._index.filter(F.col("__band__") == 0).select("__id__")
+            stored_ids = lambda: band0  # noqa: E731
+        # the emission (a read of checkpointed frames) materializes while
+        # the guards run; nothing is written until every guard has passed
+        with ThreadPoolExecutor(max_workers=2) as pool:
             f_emit = pool.submit(lambda: within.distinct().localCheckpoint())
-            f_check = (
-                pool.submit(self._check_exactly_once, batch, nb)
-                if self.enforce_unique
-                else None
+            check_adds(
+                ids, "__id__", stored_ids, tomb, self.enforce_unique, rows,
+                "compact_index()",
             )
-            f_dead = pool.submit(
-                lambda: None
-                if tomb is None
-                else b0.join(F.broadcast(tomb), "__id__", "semi").head(1)
-            )
-            if f_check is not None:
-                f_check.result()
-            dead = f_dead.result()
-            if dead:
-                raise ValueError(
-                    f"doc id {dead[0]['__id__']!r} is tombstoned — run "
-                    "compact_index() to clear deletes before re-indexing the "
-                    "id (in-memory mode has no compaction: a removed id "
-                    "cannot be re-indexed there)"
-                )
             # steady state: the ids append overlaps the emission — the
             # emission never reads the sidecar, and a failed emission
             # leaves the same diagnosable dangling id as a crash between
             # the two appends
             f_ids = (
-                pool.submit(self._write_ids, b0, "append")
+                pool.submit(
+                    self._store.write_ids, b0, "__id__", self.id_buckets, "append"
+                )
                 if self.generation is not None
                 else None
             )
@@ -1969,7 +1809,7 @@ class IncrementalLSHIndex:
                 f"doc id {dup[0]['__id__']!r} appears more than once in the "
                 "rebuild corpus — each live doc exactly once"
             )
-        live = self._stored_ids(spark)
+        live = self._store.read_ids(spark, "__id__", self.id_buckets)
         tomb = self._tombstones(spark)
         if tomb is not None:
             live = live.join(F.broadcast(tomb), "__id__", "anti")

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from storm_spark.session import bounded_persist
-from storm_spark.state.generations import GenerationStore
+from storm_spark.state.generations import GenerationStore, check_adds, check_deletes
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -1637,8 +1637,8 @@ class IVFPQIndex:
 
     The index lives in a
     :class:`~storm_spark.state.generations.GenerationStore` rooted at
-    ``path`` (the layout and its durability argument are stated there,
-    once). :meth:`build` trains the coarse quantizer + PQ codebooks,
+    ``path`` (the layout, its durability argument and the id contract
+    are stated there, once). :meth:`build` trains the coarse quantizer + PQ codebooks,
     assigns and encodes the corpus, writes generation 0 and flips the
     pointer to it; the pointer records ``_META_KEYS``. A generation
     holds:
@@ -1833,7 +1833,7 @@ class IVFPQIndex:
 
         codes = _pq_encode_cells(assigned, cbs, m, sub_len)
 
-        def _write_ids():
+        def _write_sidecar():
             self.id_buckets = self._store.write_ids(
                 assigned.select("neighbor_id"), "neighbor_id", self.id_buckets,
                 mode, generation,
@@ -1854,10 +1854,10 @@ class IVFPQIndex:
             # scheduler back-fills one write's straggler tail with the
             # next's tasks; all three consume the checkpointed `assigned`)
             with ThreadPoolExecutor(max_workers=3) as pool:
-                for f in [pool.submit(w) for w in (_write_vectors, _write_codes, _write_ids)]:
+                for f in [pool.submit(w) for w in (_write_vectors, _write_codes, _write_sidecar)]:
                     f.result()
         else:
-            _write_ids()
+            _write_sidecar()
             _write_vectors()
             _write_codes()
 
@@ -1894,18 +1894,13 @@ class IVFPQIndex:
         broadcast-argmax pass over |Δ| vectors, appends touch only the
         delta's cell partitions.
 
-        Exactly-once ids, enforced LOUDLY like ``IncrementalLSHIndex``:
-        a duplicate id within the batch or vs the stored index raises —
-        a silently re-appended id would double its ADC score (the
-        integer LUT SUMS per (query, neighbor)) and emit duplicate
-        neighbors from the exact re-rank. ``enforce_unique=False`` skips
-        the two duplicate-id checks for trusted exactly-once feeds; the
-        tombstone-reservation check ALWAYS runs — a tombstoned id's
-        re-add would be silently anti-joined out of every search and
-        physically deleted by the next :meth:`compact` (data loss, not a
-        dedup question), and the tombstone sidecar is delta-sized so the
-        semi-join costs O(|Δ| + |tombstones|)."""
+        Ids follow the exactly-once contract of
+        :mod:`storm_spark.state.generations` (``enforce_unique`` is its
+        trusted-feed switch): a re-appended id would double its ADC score
+        (the integer LUT SUMS per (query, neighbor)) and emit duplicate
+        neighbors from the exact re-rank."""
         from concurrent.futures import ThreadPoolExecutor
+        from functools import partial
 
         if self.m is None:
             raise ValueError("index not built or loaded")
@@ -1920,7 +1915,13 @@ class IVFPQIndex:
         # with the guard probes; no write starts until every guard passed
         with ThreadPoolExecutor(max_workers=1) as pool:
             f_assigned = pool.submit(self._assign_ckpt, corpus, cents)
-            self._check_add_guards(spark, ids, enforce_unique)
+            check_adds(
+                ids, "neighbor_id",
+                partial(self._store.read_ids, spark, "neighbor_id", self.id_buckets, ids),
+                self._store.tombstones(spark), enforce_unique,
+                partial(spark.read.parquet, self._store.path("vectors")),
+                "compact()",
+            )
             assigned = f_assigned.result()
         self._encode_and_write(assigned, cbs, "append", self.m, self.sub_len)
         if self.auto_compact_every:
@@ -1929,81 +1930,6 @@ class IVFPQIndex:
                 self.compact()
                 self._absorbs_since_compact = 0
         return self
-
-    def _check_add_guards(self, spark, ids: DataFrame, enforce_unique: bool) -> None:
-        # ONE driver action answers every guard: the within-batch duplicate
-        # probe, the re-sent-id probe, and the tombstone-reservation probe
-        # union into a tagged frame whose lexically-first tag reproduces
-        # the check order ('a_dup' < 'b_resent' < 'c_tomb'). A tombstoned
-        # id is refused UNCONDITIONALLY (even with enforce_unique=False):
-        # silently accepting the re-add would index a vector the tombstone
-        # then hides from every search AND the next compact() physically
-        # deletes — fail loudly, pointing at compact().
-        bad_frames = []
-        if enforce_unique:
-            bad_frames.append(
-                ids.groupBy("neighbor_id")
-                .count()
-                .filter(F.col("count") > 1)
-                .select("neighbor_id", F.lit("a_dup").alias("__why__"))
-            )
-            stored = self._stored_ids(spark, probe_ids=ids)
-            bad_frames.append(
-                ids.join(stored, "neighbor_id", "semi").select(
-                    "neighbor_id", F.lit("b_resent").alias("__why__")
-                )
-            )
-        tomb = self._store.tombstones(spark)
-        if tomb is not None:
-            bad_frames.append(
-                ids.join(tomb, "neighbor_id", "semi").select(
-                    "neighbor_id", F.lit("c_tomb").alias("__why__")
-                )
-            )
-        if not bad_frames:
-            return
-        bad_all = bad_frames[0]
-        for f in bad_frames[1:]:
-            bad_all = bad_all.unionByName(f)
-        bad = bad_all.orderBy("__why__", "neighbor_id").head(1)
-        if not bad:
-            return
-        rid, why = bad[0]["neighbor_id"], bad[0]["__why__"]
-        if why == "a_dup":
-            raise ValueError(
-                f"id {rid!r} appears more than once in "
-                "this batch — each id must arrive exactly once; run exact "
-                "dedup upstream"
-            )
-        if why == "b_resent":
-            # distinguish a true replay from a DANGLING sidecar id — a
-            # crash between the ids/ write and the vectors write left the
-            # id in ids/ with no vector behind it, so nothing would
-            # double-score and the remedy is compact() (which rebuilds the
-            # sidecar from vectors), then replaying the batch. One point
-            # lookup on the matched id, only on the already-failing path.
-            in_vectors = (
-                spark.read.parquet(self._store.path("vectors"))
-                .filter(F.col("neighbor_id") == F.lit(rid))
-                .head(1)
-            )
-            if not in_vectors:
-                raise ValueError(
-                    f"id {rid!r} is in the ids/ sidecar but has no stored "
-                    "vector — a dangling entry from an add interrupted "
-                    "between the sidecar and vectors writes; run "
-                    "compact() to heal the sidecar, then replay this "
-                    "batch"
-                )
-            raise ValueError(
-                f"id {rid!r} is already indexed — "
-                "each id must arrive exactly once (replayed batch?); a "
-                "re-append would double its ADC score"
-            )
-        raise ValueError(
-            f"id {rid!r} is tombstoned — run "
-            "compact() to clear deletes before re-indexing the id"
-        )
 
     def remove_vectors(self, ids: DataFrame) -> "IVFPQIndex":
         """Delete indexed vectors — the other half of the serving
@@ -2018,100 +1944,26 @@ class IVFPQIndex:
         against the unrolled oracle over the surviving corpus, quantizers
         unchanged — frozen at build, the standard serving contract).
 
-        Loud-failure contract (the ``IncrementalLSHIndex`` convention):
-        a duplicate id within the batch, an id never indexed, or an id
-        already tombstoned each raise — all three indicate a confused
-        caller whose silent acceptance would hide an upstream bug. A
-        tombstoned id stays RESERVED (``add_vectors`` still refuses it)
-        until :meth:`compact` physically drops it, after which the id may
-        be indexed again."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        The delete guards and the tombstone reservation are the id
+        contract of :mod:`storm_spark.state.generations`."""
         if self.m is None:
             raise ValueError("index not built or loaded")
         spark = ids.sparkSession
         first = ids.columns[0] if "neighbor_id" not in ids.columns else "neighbor_id"
         col = self.id_col if self.id_col in ids.columns else first
-        # checkpoint once: the guards probe this frame five times and the
-        # caller's lineage may be expensive
+        # checkpoint once: the guards probe this frame several times and
+        # the caller's lineage may be expensive
         dele = ids.select(
             F.col(col).cast("bigint").alias("neighbor_id")
         ).localCheckpoint()
-        # an empty delete batch would pass every guard vacuously and
-        # permanently materialize the tombstone sidecar, taxing every
-        # later search/add with the anti-join for nothing — refuse it.
-        # ONE aggregate job answers both the empty and the duplicate
-        # guard; the offending id is re-fetched only on the failure path.
-        stats = (
-            dele.groupBy("neighbor_id")
-            .count()
-            .agg(F.count(F.lit(1)).alias("n_ids"), F.max("count").alias("max_n"))
-            .collect()[0]
+        check_deletes(
+            dele, "neighbor_id",
+            self._store.read_ids(spark, "neighbor_id", self.id_buckets, dele),
+            self._store.read_ids(spark, "neighbor_id", self.id_buckets),
+            self._store.tombstones(spark),
         )
-        if stats["n_ids"] == 0:
-            raise ValueError(
-                "empty delete batch — nothing to remove (a confused caller; "
-                "the loud-failure convention refuses no-op deletes)"
-            )
-        if stats["max_n"] > 1:
-            dup = (
-                dele.groupBy("neighbor_id").count().filter(F.col("count") > 1).head(1)
-            )
-            raise ValueError(
-                f"id {dup[0]['neighbor_id']!r} appears more than once in this "
-                "delete batch — each id may be deleted at most once"
-            )
-        prior = self._store.tombstones(spark)
-        # the membership check prunes to the delete batch's partitions;
-        # the emptied-index guard asks about ids OUTSIDE the batch, so it
-        # scans the full (one-column) sidecar. The three guards are
-        # independent, side-effect-free reads — run them concurrently and
-        # await in the original order; nothing durable happens until the
-        # tombstone append below.
-        stored = self._stored_ids(spark, probe_ids=dele)
-        live = self._stored_ids(spark)
-        if prior is not None:
-            live = live.join(prior, "neighbor_id", "anti")
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_missing = pool.submit(
-                lambda: dele.join(stored, "neighbor_id", "anti").head(1)
-            )
-            f_twice = (
-                pool.submit(
-                    lambda: dele.join(prior, "neighbor_id", "semi").head(1)
-                )
-                if prior is not None
-                else None
-            )
-            f_emptied = pool.submit(
-                lambda: live.join(dele, "neighbor_id", "anti").isEmpty()
-            )
-            missing = f_missing.result()
-            if missing:
-                raise ValueError(
-                    f"id {missing[0]['neighbor_id']!r} is not indexed — deleting "
-                    "an unknown id indicates a confused caller"
-                )
-            if f_twice is not None:
-                twice = f_twice.result()
-                if twice:
-                    raise ValueError(
-                        f"id {twice[0]['neighbor_id']!r} is already tombstoned — "
-                        "deleting it twice indicates a confused caller"
-                    )
-            if f_emptied.result():
-                raise ValueError(
-                    "this delete would tombstone every remaining indexed vector "
-                    "— rebuild the index instead of emptying it"
-                )
         self._store.append_tombstones(dele)
         return self
-
-    def _stored_ids(self, spark, probe_ids: DataFrame | None = None) -> DataFrame:
-        """Stored neighbor ids for the exactly-once checks — the ids
-        sidecar, pruned to ``probe_ids``' partitions when given (see
-        ``GenerationStore.read_ids``)."""
-        return self._store.read_ids(spark, "neighbor_id", self.id_buckets, probe_ids)
 
     def compact(self, n_files: int = 1) -> "IVFPQIndex":
         """Table-maintenance pass: physically drop tombstoned rows and

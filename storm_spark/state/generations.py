@@ -33,6 +33,31 @@ Two sidecars are shared by both indexes, one per generation:
 The pointer plays the role of ``ParquetMapState``'s manifest
 (``state/parquet_state.py``): Trident's txid-versioned commit, applied to
 a whole generation.
+
+The id contract, shared by both indexes and enforced by
+:func:`check_adds` / :func:`check_deletes` — they take DataFrames, so the
+in-memory LSH index runs the same guards. Every guard fails loudly and
+runs before the operation's first durable write:
+
+- exactly-once add: an id repeated within a batch, or an id already in
+  the stored ids (a replayed or re-sent batch), is refused — re-indexing
+  it would double its rows. ``enforce_unique=False`` (a trusted
+  exactly-once feed) skips these two probes;
+- tombstone reservation: a tombstoned id is refused even then, until a
+  compaction physically drops it — its re-added rows would be hidden by
+  the tombstone and then deleted by that compaction;
+- dangling ids: an add appends ids before rows, so a crash between the
+  two leaves an id in the sidecar with no rows behind it. Its replay is
+  diagnosed apart from a true replay and names the remedy, a compaction
+  (which re-derives the sidecar from the rows), then the replay;
+- deletes: an empty batch, an id repeated within it, an id never
+  indexed, an id already tombstoned, and a delete that would leave no
+  live id are each refused, in that order.
+
+When several add guards fail at once, a within-batch duplicate wins over
+a re-sent (or dangling) id, which wins over a tombstoned one — so with
+``enforce_unique`` on, a tombstoned id, still in the sidecar until the
+compaction, reports as re-sent.
 """
 
 from __future__ import annotations
@@ -42,6 +67,9 @@ import math
 import os
 import re
 import shutil
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -164,3 +192,125 @@ class GenerationStore:
 
     def append_tombstones(self, ids: DataFrame) -> None:
         ids.write.mode("append").parquet(self.path("tombstones"))
+
+
+def check_adds(
+    ids: DataFrame,
+    col: str,
+    stored: Callable[[], DataFrame] | None,
+    tombstones: DataFrame | None,
+    enforce_unique: bool,
+    rows: Callable[[], DataFrame] | None,
+    remedy: str,
+) -> None:
+    """The add guards of the id contract, in ONE driver action: the
+    probes union into a frame tagged so its first row by tag is the
+    highest-precedence failure. ``stored`` returns the stored ids (called
+    only under ``enforce_unique`` — a pruned sidecar read costs an
+    action); ``rows`` returns the stored rows, opened only to diagnose a
+    re-sent id as dangling; ``remedy`` names the compaction call."""
+    probes = []
+    if enforce_unique:
+        probes.append(
+            ids.groupBy(col).count().filter(F.col("count") > 1)
+            .select(col, F.lit("a_dup").alias("__why__"))
+        )
+        if stored is not None:
+            probes.append(
+                ids.join(stored(), col, "semi")
+                .select(col, F.lit("b_resent").alias("__why__"))
+            )
+    if tombstones is not None:
+        probes.append(
+            ids.join(F.broadcast(tombstones), col, "semi")
+            .select(col, F.lit("c_tomb").alias("__why__"))
+        )
+    if not probes:
+        return
+    bad = reduce(DataFrame.unionByName, probes).orderBy("__why__", col).head(1)
+    if not bad:
+        return
+    rid, why = bad[0][col], bad[0]["__why__"]
+    if why == "a_dup":
+        raise ValueError(
+            f"id {rid!r} appears more than once in this batch — each id must "
+            "arrive exactly once; run exact dedup upstream"
+        )
+    if why == "b_resent":
+        if rows is not None and not rows().filter(F.col(col) == F.lit(rid)).head(1):
+            raise ValueError(
+                f"id {rid!r} is in the ids sidecar but has no stored rows — a "
+                "dangling entry from an add interrupted between the sidecar "
+                f"and row appends; run {remedy} to heal the sidecar, then "
+                "replay this batch"
+            )
+        raise ValueError(
+            f"id {rid!r} was already indexed — each id must arrive exactly "
+            "once (replayed batch or re-sent id?); run exact dedup upstream "
+            "or dedup the replay"
+        )
+    raise ValueError(
+        f"id {rid!r} is tombstoned — run {remedy} to clear deletes before "
+        "re-indexing the id"
+    )
+
+
+def check_deletes(
+    dele: DataFrame,
+    col: str,
+    stored_probe: DataFrame,
+    stored_full: DataFrame,
+    tombstones: DataFrame | None,
+) -> None:
+    """The delete guards of the id contract. ONE aggregate job answers the
+    empty and duplicate guards (the duplicate is re-fetched only on that
+    failure); the other three are independent reads, run concurrently and
+    awaited in precedence order. ``stored_probe`` may be pruned to
+    ``dele``'s partitions; the would-empty guard asks about ids outside
+    the batch, so ``stored_full`` is every stored id."""
+    stats = (
+        dele.groupBy(col)
+        .count()
+        .agg(F.count(F.lit(1)).alias("n_ids"), F.max("count").alias("max_n"))
+        .collect()[0]
+    )
+    # an empty batch would pass every guard vacuously and materialize the
+    # tombstone sidecar, taxing every later read with its anti-join
+    if stats["n_ids"] == 0:
+        raise ValueError(
+            "empty delete batch — nothing to remove (a confused caller; the "
+            "loud-failure convention refuses no-op deletes)"
+        )
+    if stats["max_n"] > 1:
+        dup = dele.groupBy(col).count().filter(F.col("count") > 1).head(1)
+        raise ValueError(
+            f"id {dup[0][col]!r} appears more than once in this delete batch "
+            "— each id may be deleted at most once"
+        )
+    live = stored_full
+    if tombstones is not None:
+        tombstones = F.broadcast(tombstones)
+        live = live.join(tombstones, col, "anti")
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        f_missing = pool.submit(lambda: dele.join(stored_probe, col, "anti").head(1))
+        f_twice = pool.submit(
+            lambda: tombstones is not None and dele.join(tombstones, col, "semi").head(1)
+        )
+        f_emptied = pool.submit(lambda: live.join(dele, col, "anti").isEmpty())
+        missing = f_missing.result()
+        if missing:
+            raise ValueError(
+                f"id {missing[0][col]!r} is not indexed — deleting an unknown "
+                "id indicates a confused caller"
+            )
+        twice = f_twice.result()
+        if twice:
+            raise ValueError(
+                f"id {twice[0][col]!r} is already tombstoned — deleting it "
+                "twice indicates a confused caller"
+            )
+        if f_emptied.result():
+            raise ValueError(
+                "this delete would tombstone every remaining indexed id — "
+                "rebuild the index instead of emptying it"
+            )

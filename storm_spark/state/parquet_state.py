@@ -104,12 +104,20 @@ class ParquetMapState(MapState):
         return os.path.join(self.path, "_VERSION.json")
 
     def _manifest(self) -> dict[str, int]:
-        """bucket id (str) -> committed write sequence holding its data."""
+        """bucket id (str) -> committed write sequence holding its data.
+        Only an absent manifest means a fresh state: an unreadable one must
+        not read as empty, or the next commit would garbage-collect every
+        sequence it can no longer see."""
         try:
             with open(self._meta_path()) as f:
                 return json.load(f)["buckets"]
-        except (FileNotFoundError, json.JSONDecodeError, KeyError):
+        except FileNotFoundError:
             return {}
+        except (json.JSONDecodeError, KeyError, TypeError) as e:
+            raise ValueError(
+                f"state manifest {self._meta_path()!r} is unreadable "
+                f"({type(e).__name__}: {e}); refusing to treat it as empty"
+            ) from e
 
     def _next_seq(self) -> int:
         existing = [
@@ -138,7 +146,12 @@ class ParquetMapState(MapState):
             for b in wanted
             if b in manifest
         ]
-        dirs = [d for d in dirs if os.path.isdir(d)]
+        lost = [d for d in dirs if not os.path.isdir(d)]
+        if lost:
+            raise ValueError(
+                f"state manifest {self._meta_path()!r} names bucket "
+                f"directories that are missing: {lost[:3]}"
+            )
         if not dirs:
             return self.spark.createDataFrame([], self._full_schema())
         # recursiveFileLookup disables partition discovery — the bucket id is

@@ -84,30 +84,14 @@ class StreamingTopologyRunner:
         fmt: str = "parquet",
         max_files_per_trigger: int = 1,
         checkpoint_dir: str | None = None,
-        trigger_seconds: float | None = None,
     ) -> None:
-        """Consume a file-source directory to exhaustion (synchronous).
+        """Consume a file-source directory to exhaustion (synchronous):
+        :meth:`start_files`, drained and stopped.
 
         ``maxFilesPerTrigger=1`` makes each input file one micro-batch —
         the test/demo cadence; production tunes bytes-per-trigger instead.
-        ``trigger_seconds`` sets a processing-time trigger — the engine's
-        analogue of the reference's batch-emit interval / tick cadence
-        (``topology.trident.batch.emit.interval.millis``,
-        ``conf/defaults.yaml:141``; tick tuples ``Constants.java:30``).
         """
-        spark = self.topology.spark
-        reader = (
-            spark.readStream.format(fmt)
-            .schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .load(path)
-        )
-        writer = reader.writeStream.foreachBatch(self._process_epoch).outputMode("update")
-        if trigger_seconds is not None:
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        q = writer.start()
+        q = self.start_files(path, schema, fmt, max_files_per_trigger, checkpoint_dir)
         try:
             q.processAllAvailable()
         finally:

@@ -6,7 +6,9 @@ generation, artifacts under ``{root}/g{N}/`` — so one test pins, for
 each: the fresh-start guard (refuse a non-empty root, wipe it under the
 overwrite flag), reattaching through the pointer, an orphan generation
 that stays invisible until the next maintenance op sweeps it, and N−1
-retention after two maintenance ops.
+retention after two maintenance ops. Both indexes also share one id
+contract (``check_adds``/``check_deletes``); a second test pins its
+precedence when several guards fail at once.
 """
 
 import os
@@ -17,6 +19,8 @@ from pyspark.sql import functions as F
 
 class _LSH:
     """Adapter: absorb / reattach / maintain an IncrementalLSHIndex."""
+
+    col = "__id__"
 
     def __init__(self, spark, root):
         self.spark, self.root = spark, root
@@ -42,6 +46,13 @@ class _LSH:
     def maintain(self, idx):
         idx.compact_index()
 
+    def add(self, idx, ids, enforce_unique=True):
+        idx.enforce_unique = enforce_unique
+        idx.add_docs(self._docs(ids))
+
+    def remove(self, idx, ids):
+        idx.remove_docs(self.spark.createDataFrame([(i,) for i in ids], "doc_id long"))
+
     def drop(self):
         from storm_spark.functions.dedup import IncrementalLSHIndex
 
@@ -58,18 +69,28 @@ class _LSH:
 class _IVF:
     """Adapter: build / load / compact an IVFPQIndex."""
 
+    col = "neighbor_id"
+
     def __init__(self, spark, root):
         self.spark, self.root = spark, root
 
     def start(self, ids, overwrite=False):
         from storm_spark.functions.similarity import IVFPQIndex
 
-        vecs = self.spark.createDataFrame(
+        return IVFPQIndex(self.root).build(
+            self._vecs(ids), m=2, ksub=2, n_lists=2, overwrite=overwrite
+        )
+
+    def add(self, idx, ids, enforce_unique=True):
+        idx.add_vectors(self._vecs(ids), enforce_unique=enforce_unique)
+
+    def remove(self, idx, ids):
+        idx.remove_vectors(self.spark.createDataFrame([(i,) for i in ids], "vec_id long"))
+
+    def _vecs(self, ids):
+        return self.spark.createDataFrame(
             [(i, [float(i % 4), float(i % 3), float(i % 5), 1.0]) for i in ids],
             "vec_id long, embedding array<double>",
-        )
-        return IVFPQIndex(self.root).build(
-            vecs, m=2, ksub=2, n_lists=2, overwrite=overwrite
         )
 
     def reattach(self):
@@ -84,13 +105,18 @@ class _IVF:
         pass
 
 
+def _ids(spark, idx, col):
+    """Every id in the serving generation's ids sidecar."""
+    return {r[0] for r in idx._store.read_ids(spark, col, idx.id_buckets).collect()}
+
+
 @pytest.mark.parametrize("kind", [_LSH, _IVF], ids=["lsh", "ivf"])
 def test_generation_store_contract(spark, tmp_path, kind):
     root = str(tmp_path / "idx")
     a = kind(spark, root)
 
     def live(idx):
-        return {r[0] for r in idx._stored_ids(spark).collect()}
+        return _ids(spark, idx, kind.col)
 
     try:
         # fresh start: a non-empty root is refused and left intact ...
@@ -153,10 +179,37 @@ def test_lsh_first_epoch_failure_keeps_prior_index(spark, tmp_path):
         with pytest.raises(Exception, match="injected emission failure"):
             doomed.add_docs(a._docs(range(10, 20)))
         res = a.reattach()
-        assert {r[0] for r in res._stored_ids(spark).collect()} == set(range(10))
+        assert _ids(spark, res, a.col) == set(range(10))
         with pytest.raises(ValueError, match="already indexed"):
             res.add_docs(a._docs([3]))
         res.add_docs(a._docs(range(10, 20)))
-        assert res._stored_ids(spark).count() == 20
+        assert len(_ids(spark, res, a.col)) == 20
+    finally:
+        a.drop()
+
+
+@pytest.mark.parametrize("kind", [_LSH, _IVF], ids=["lsh", "ivf"])
+def test_id_guard_contract(spark, tmp_path, kind):
+    """Precedence of the shared id guards when several fail at once, and
+    that a refused call writes nothing."""
+    a = kind(spark, str(tmp_path / "idx"))
+    try:
+        idx = a.start(range(10))
+        a.remove(idx, [3])
+        # a within-batch duplicate (11) outranks a re-sent id (5)
+        with pytest.raises(ValueError, match="more than once"):
+            a.add(idx, [11, 11, 5])
+        # a tombstoned id is still in the ids sidecar until a compaction:
+        # re-sent outranks tombstoned, which a trusted feed still hits
+        with pytest.raises(ValueError, match="already indexed"):
+            a.add(idx, [3, 12])
+        with pytest.raises(ValueError, match="is tombstoned"):
+            a.add(idx, [3, 12], enforce_unique=False)
+        # an unknown id (99) outranks a double delete (3)
+        with pytest.raises(ValueError, match="not indexed"):
+            a.remove(idx, [99, 3])
+        assert _ids(spark, idx, a.col) == set(range(10))
+        tombs = idx._store.tombstones(spark)
+        assert {r[0] for r in tombs.collect()} == {3}
     finally:
         a.drop()

@@ -834,7 +834,7 @@ def test_lsh_index_exactly_once_ids_scan_is_partition_pruned(spark, tmp_path):
     only the delta's touched `__idb__` hash partitions — a static
     PartitionFilter `__idb__ IN (...)`, the IVFPQIndex ids/ pattern —
     so the per-epoch check is O(|Δ| + index/id_buckets) by plan, never
-    an index-wide id scan. Asserted on _stored_ids' plan directly (the
+    an index-wide id scan. Asserted on the pruned read's plan directly (the
     frame the semi-join consumes) and semantically: a probe id that IS
     stored survives the pruning (membership is partition-local)."""
     from storm_spark.functions.dedup import IncrementalLSHIndex
@@ -853,7 +853,7 @@ def test_lsh_index_exactly_once_ids_scan_is_partition_pruned(spark, tmp_path):
         probe = spark.createDataFrame([(3,), (7,)], "doc_id long").select(
             F.col("doc_id").alias("__id__")
         )
-        pruned = idx._stored_ids(spark, probe=probe)
+        pruned = idx._store.read_ids(spark, "__id__", idx.id_buckets, probe)
         plan = pruned._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan, plan
         part = plan.split("PartitionFilters")[1].split("]")[0]
@@ -863,7 +863,7 @@ def test_lsh_index_exactly_once_ids_scan_is_partition_pruned(spark, tmp_path):
         assert {3, 7} <= got
         assert len(got) < 30  # untouched partitions never scanned
         # the unprobed read is the FULL id set (the emptied-index guard)
-        assert idx._stored_ids(spark).count() == 30
+        assert idx._store.read_ids(spark, "__id__", idx.id_buckets).count() == 30
     finally:
         idx.drop_tables()
 

@@ -805,7 +805,7 @@ def test_ivf_pq_index_exactly_once_check_is_partition_pruned(spark, tmp_path):
     delta = spark.createDataFrame(
         [(9001, rows[0][1])], "vec_id bigint, embedding array<float>"
     ).select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    pruned = idx._stored_ids(spark, probe_ids=delta)
+    pruned = idx._store.read_ids(spark, "neighbor_id", idx.id_buckets, delta)
     assert pruned.count() >= 0  # force execution so the plan is final
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     pf = [

@@ -223,6 +223,46 @@ def test_parquet_empty_batch_preserves_state(spark, tmp_path):
     assert st.as_dict() == {("a",): 2}
 
 
+def test_parquet_corrupt_manifest_fails_loudly_and_keeps_state(spark, tmp_path):
+    """An unreadable manifest is an error, never an empty state: the next
+    feed must raise, naming the manifest, and leave every committed write
+    sequence on disk. A manifest naming a missing bucket directory raises
+    too, instead of serving the bucket as empty."""
+    import os
+    import shutil
+
+    from storm_spark import FeederSource, LocalCluster, Topology
+
+    path = str(tmp_path / "corrupt")
+    topo = Topology(spark)
+    feeder = FeederSource(["word"])
+    st = (
+        topo.new_stream("s", feeder)
+        .group_by(["word"])
+        .persistent_aggregate(ParquetMapState.factory(path), ["word"], Count(), ["count"])
+    )
+    cluster = LocalCluster(topo)
+    cluster.feed(feeder, [[f"w{i}"] for i in range(200)])
+    cluster.feed(feeder, [["w1"], ["w2"]])
+    data = os.path.join(path, "data")
+    seqs = sorted(os.listdir(data))
+    assert seqs == ["s1", "s2"]
+    meta = os.path.join(path, "_VERSION.json")
+    good = open(meta).read()
+    with open(meta, "w") as fh:
+        fh.write(good[: len(good) // 2])
+    with pytest.raises(ValueError, match="_VERSION.json"):
+        cluster.feed(feeder, [["w3"]])
+    assert sorted(os.listdir(data)) == seqs
+    # the manifest restored, a bucket directory it names goes missing
+    with open(meta, "w") as fh:
+        fh.write(good)
+    bucket = next(d for d in os.listdir(os.path.join(data, "s2")) if d.startswith("__bucket__="))
+    shutil.rmtree(os.path.join(data, "s2", bucket))
+    with pytest.raises(ValueError, match="missing"):
+        st.state.as_dict()
+
+
 class ConcatReducer(ReducerAggregator):
     """ReducerAggregator: fold words into a '+'-joined string (order within a
     batch follows the fold; deterministic for single-partition feeds)."""

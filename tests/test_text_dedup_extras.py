@@ -2064,18 +2064,16 @@ def test_lsh_index_dangling_sidecar_diagnosed_and_healed(spark, tmp_path):
         idx.add_docs(docs.filter("doc_id < 10"))
         # simulate the interrupted absorb: the batch's ids land in the
         # sidecar, the index append never happens
-        idx._write_ids(
-            docs.filter("doc_id >= 10").select(
-                F.col("doc_id").alias("__id__")
-            ),
-            "append",
+        idx._store.write_ids(
+            docs.filter("doc_id >= 10").select(F.col("doc_id").alias("__id__")),
+            "__id__", idx.id_buckets, "append",
         )
         with _pytest.raises(ValueError, match="dangling entry"):
             idx.add_docs(docs.filter("doc_id >= 10"))
         idx.compact_index()  # heals: sidecar re-derived from index rows
-        assert idx._stored_ids(spark).count() == 10
+        assert idx._store.read_ids(spark, "__id__", idx.id_buckets).count() == 10
         idx.add_docs(docs.filter("doc_id >= 10"))  # replay now succeeds
-        assert idx._stored_ids(spark).count() == 20
+        assert idx._store.read_ids(spark, "__id__", idx.id_buckets).count() == 20
         # a TRUE replay still raises the generic loud error
         with _pytest.raises(ValueError, match="already indexed"):
             idx.add_docs(docs.filter("doc_id < 10"))

@@ -30,10 +30,11 @@ bucket; pairs mode would materialize ~10^12 rows, so it is skipped)::
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

@@ -19,7 +19,8 @@ import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 
 def plan_text(df) -> str:
@@ -68,7 +69,7 @@ def main() -> None:
     if args.skip_lifecycle:
         names = [n for n in names if n not in set(bench.LIFECYCLE)]
 
-    out_dir = os.path.join("/root/repo/plans", args.tag.replace("/", os.sep))
+    out_dir = os.path.join(_REPO, "plans", args.tag.replace("/", os.sep))
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark("storm_spark_plan_dump")

@@ -25,10 +25,11 @@ knobs `choose_pq_params` maps targets onto; keep the two in sync.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
