@@ -13,10 +13,12 @@ Parity map:
   update when the stored txid equals the current one (requires identical
   replayed batches).
 
-The engine stores these as *columns* on a keyed state table
-(``key..., curr, prev, txid``) and merges per epoch with a join +
-``combine_expr`` — a direct, shuffle-parallel port of
-``OpaqueMap.multiUpdate`` (``state/map/OpaqueMap.java:54-85``).
+The replay rule is stated once per medium: scalar in
+:mod:`storm_spark.state.opaque` (applied per value by ``MemoryMapState``),
+columnar in the :class:`~storm_spark.state.parquet_state.ParquetMapState`
+docstring (``key..., curr, prev, txid`` columns merged per epoch with a join —
+a shuffle-parallel port of ``OpaqueMap.multiUpdate``,
+``state/map/OpaqueMap.java:54-85``).
 """
 
 from __future__ import annotations

@@ -1,9 +1,10 @@
 """In-memory MapState — test/demo backend (driver-side dict).
 
 Parity: ``trident/testing/MemoryMapState.java:33-41`` + the map wrappers
-``OpaqueMap.java:27-120`` / ``TransactionalMap.java:27-109`` whose skip/replay
-logic is implemented here per value. The scale backend with identical
-semantics is :class:`storm_spark.state.parquet_state.ParquetMapState`.
+``OpaqueMap.java:27-120`` / ``TransactionalMap.java:27-109``: each key holds
+an :class:`OpaqueValue` or :class:`TransactionalValue` and is updated through
+the scalar replay rule of :mod:`storm_spark.state.opaque`. The scale backend
+with identical semantics is :class:`storm_spark.state.parquet_state.ParquetMapState`.
 """
 
 from __future__ import annotations
@@ -14,15 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from storm_spark.state.base import MapState, StateType
-
-
-class _Opaque:
-    __slots__ = ("txid", "curr", "prev")
-
-    def __init__(self, txid: int | None, curr: Any, prev: Any):
-        self.txid = txid
-        self.curr = curr
-        self.prev = prev
+from storm_spark.state.opaque import OpaqueValue, TransactionalValue
 
 
 class MemoryMapState(MapState):
@@ -37,14 +30,19 @@ class MemoryMapState(MapState):
         self.value_field = value_field
         self.value_type = value_type
         self.state_type = state_type
-        self._map: dict[tuple, _Opaque] = {}
+        self._map: dict[tuple, OpaqueValue | TransactionalValue] = {}
+        self._empty = (
+            OpaqueValue(None, None)
+            if state_type is StateType.OPAQUE
+            else TransactionalValue(None, None)
+        )
         self._cur_txid: int | None = None
-        self._last_committed: int | None = None
-        # keys already updated during the current commit attempt — later
-        # updates in the same attempt accumulate instead of re-triggering the
-        # replay protocol (parity: CachedBatchReadsMap.java:27 intra-batch
+        # keys already updated during the current commit attempt, each with
+        # its value from before the attempt: later updates in the same attempt
+        # accumulate onto the attempt's own write and re-apply the rule to
+        # that earlier value (parity: CachedBatchReadsMap.java:27 intra-batch
         # read-your-writes; cleared on beginCommit)
-        self._batch_updated: set[tuple] = set()
+        self._batch_updated: dict[tuple, OpaqueValue | TransactionalValue] = {}
 
     @classmethod
     def factory(cls, state_type: StateType = StateType.OPAQUE) -> Callable:
@@ -56,32 +54,27 @@ class MemoryMapState(MapState):
     # lifecycle ------------------------------------------------------------
     def begin_commit(self, txid: int) -> None:
         self._cur_txid = txid
-        self._batch_updated = set()
+        self._batch_updated = {}
 
     def commit(self, txid: int) -> None:
-        self._last_committed = txid
         self._cur_txid = None
-        self._batch_updated = set()
+        self._batch_updated = {}
+
+    def _txid(self) -> int | None:
+        """The txid the rule sees: NON_TRANSACTIONAL keeps none."""
+        if self.state_type is StateType.NON_TRANSACTIONAL:
+            return None
+        return self._cur_txid
 
     # point API ------------------------------------------------------------
     def multi_get(self, keys: Sequence[tuple]) -> list[Any]:
+        """A replayed txid reads the pre-batch value until the key is
+        updated in this attempt (parity: OpaqueValue.java:49-58)."""
+        t = self._txid()
         out = []
-        for k in keys:
-            k = tuple(k)
-            s = self._map.get(k)
-            if s is None:
-                out.append(None)
-            elif (
-                self.state_type is StateType.OPAQUE
-                and self._cur_txid is not None
-                and s.txid == self._cur_txid
-                and k not in self._batch_updated
-            ):
-                # replayed txid, not yet updated this attempt: the read sees
-                # the pre-update value (parity: OpaqueValue.java:49-58)
-                out.append(s.prev)
-            else:
-                out.append(s.curr)
+        for k in map(tuple, keys):
+            rec = self._map.get(k)
+            out.append(None if rec is None else rec.get(None if k in self._batch_updated else t))
         return out
 
     def multi_put(self, keys: Sequence[tuple], vals: Sequence[Any]) -> None:
@@ -99,56 +92,21 @@ class MemoryMapState(MapState):
         combine: Callable[[Any, Any], Any],
         zero: Any = None,
     ) -> list[Any]:
-        t = self._cur_txid
+        t = self._txid()
         out = []
-        for k, d in zip(keys, deltas):
-            k = tuple(k)
-            s = self._map.get(k)
-            updated = k in self._batch_updated
-            if updated and s is not None:
-                # second update within the same commit attempt: plain
-                # accumulate (parity: CachedBatchReadsMap intra-batch cache)
-                s.curr = combine(s.curr, d)
-                out.append(s.curr)
-                continue
-            if (
-                t is not None
-                and s is not None
-                and s.txid is not None
-                and t < s.txid
-                and self.state_type is not StateType.NON_TRANSACTIONAL
-            ):
-                # parity: OpaqueValue.java:44 fail-fast — a txid behind the
-                # stored one means the epoch counter was reset (fresh
-                # checkpoint against existing state); updating would corrupt
-                # the replay chain silently
-                raise ValueError(
-                    f"Current batch ({t}) is behind state's batch ({s.txid}) "
-                    f"for key {k}: refusing to update (stale/reset txid)"
-                )
-            if self.state_type is StateType.OPAQUE:
-                # parity: OpaqueValue.update (OpaqueValue.java:37-47)
-                if s is None:
-                    nv = _Opaque(t, combine(zero, d), None)
-                elif t is not None and s.txid == t:
-                    nv = _Opaque(t, combine(s.prev if s.prev is not None else zero, d), s.prev)
-                else:
-                    nv = _Opaque(t, combine(s.curr, d), s.curr)
-                self._map[k] = nv
-                out.append(nv.curr)
-            elif self.state_type is StateType.TRANSACTIONAL:
-                # parity: TransactionalMap.multiUpdate skip (TransactionalMap.java:66-76)
-                if s is not None and t is not None and s.txid == t:
-                    out.append(s.curr)
-                    continue  # do NOT mark updated: later calls keep skipping
-                curr = combine(s.curr if s is not None else zero, d)
-                self._map[k] = _Opaque(t, curr, None)
-                out.append(curr)
+        for k, d in zip(map(tuple, keys), deltas):
+            rec = self._map.get(k)
+            if rec is not None and k in self._batch_updated:
+                # a later update in this attempt accumulates onto its write
+                pre, base = self._batch_updated[k], rec.get(None)
             else:
-                curr = combine(s.curr if s is not None else zero, d)
-                self._map[k] = _Opaque(None, curr, None)
-                out.append(curr)
-            self._batch_updated.add(k)
+                pre = rec if rec is not None else self._empty
+                base = pre.get(t)
+            new = pre.update(t, combine(zero if base is None else base, d))
+            if new is not pre:  # a skipped transactional replay stays unmarked
+                self._map[k] = new
+                self._batch_updated[k] = pre
+            out.append(new.get(None))
         return out
 
     # set API --------------------------------------------------------------
@@ -169,11 +127,11 @@ class MemoryMapState(MapState):
         schema = StructType(self.key_schema.fields.copy()).add(
             self.value_field, _parse_ddl(self.value_type)
         )
-        rows = [(*k, s.curr) for k, s in self._map.items()]
+        rows = [(*k, rec.get(None)) for k, rec in self._map.items()]
         return spark.createDataFrame(rows, schema)
 
     def as_dict(self) -> dict[tuple, Any]:
-        return {k: s.curr for k, s in self._map.items()}
+        return {k: rec.get(None) for k, rec in self._map.items()}
 
 
 class LRUMemoryMapState(MemoryMapState):
@@ -215,15 +173,8 @@ class LRUMemoryMapState(MemoryMapState):
 
     def multi_get(self, keys: Sequence[tuple]) -> list[Any]:
         out = super().multi_get(keys)
-        for k in keys:
-            kt = tuple(k)
-            if kt in self._map:
-                self._map.move_to_end(kt)
-        return out
-
-    def multi_put(self, keys: Sequence[tuple], vals: Sequence[Any]) -> None:
-        super().multi_put(keys, vals)
         self._touch_and_evict(keys)
+        return out
 
     def multi_update(
         self,
@@ -232,6 +183,7 @@ class LRUMemoryMapState(MemoryMapState):
         combine: Callable[[Any, Any], Any],
         zero: Any = None,
     ) -> list[Any]:
+        # multi_put goes through here too
         out = super().multi_update(keys, deltas, combine, zero)
         self._touch_and_evict(keys)
         return out

@@ -11,21 +11,14 @@ protocol (``OpaqueValue.java:37-58``, ``OpaqueMap.java:54-85``,
 Keys are hash-bucketed (``pmod(hash(keys), num_buckets)``). Per epoch the
 engine computes the batch's per-key partial aggregate (one row per touched
 key — Spark's partial+final hash agg), finds the TOUCHED buckets, and FULL
-OUTER joins only those buckets' state with the batch, applying per key::
-
-    no stored row          -> curr = combine(zero, delta);       prev = zero
-    stored.txid == txid    -> curr = combine(prev, delta)        (replay: redo
-                              from prev — idempotent even if the batch changed)
-    stored.txid != txid    -> prev = curr; curr = combine(curr, delta)
-    delta is null          -> row untouched
-
-TRANSACTIONAL skips the update when stored.txid == txid; NON_TRANSACTIONAL
-always combines. The new bucket files land under a fresh write sequence;
-``commit(txid)`` atomically flips the manifest so each bucket points at its
-latest sequence — untouched buckets carry forward BY REFERENCE, so per-epoch
-I/O is O(touched buckets), not O(total state). At cluster scale this becomes
-a Delta/Iceberg MERGE (jars not in this image; the merge logic is identical —
-the manifest plays the role of the table snapshot).
+OUTER joins only those buckets' state with the batch, applying the replay
+rule stated in the :class:`ParquetMapState` docstring. The new bucket files
+land under a fresh write sequence; ``commit(txid)`` atomically flips the
+manifest so each bucket points at its latest sequence — untouched buckets
+carry forward BY REFERENCE, so per-epoch I/O is O(touched buckets), not
+O(total state). At cluster scale this becomes a Delta/Iceberg MERGE (jars
+not in this image; the merge logic is identical — the manifest plays the
+role of the table snapshot).
 
 A replayed txid reads the previously committed manifest while writing its own
 sequence, so replay isolation holds even mid-crash. Unreferenced sequences
@@ -46,7 +39,7 @@ from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructType
+from pyspark.sql.types import IntegerType, LongType, StructType
 
 from storm_spark.state.base import MapState, StateType
 
@@ -55,6 +48,25 @@ BUCKET = "__bucket__"
 
 
 class ParquetMapState(MapState):
+    """Keyed state on a bucket-versioned parquet table. Its merge is the
+    columnar statement of the replay rule whose scalar statement is
+    :mod:`storm_spark.state.opaque`: over the state/batch FULL OUTER join
+    (``__b__`` is the key's batch delta, NULL when the batch lacks the key)
+    one projection computes, per key::
+
+        base = PREV on an OPAQUE replay (stored TXID == txid), else CURR
+               (NULL for a new key)
+        keep = no delta, or a TRANSACTIONAL replay
+        CURR = CURR if keep else combine(coalesce(base, zero), delta)
+        PREV = OPAQUE: PREV if keep else base; otherwise NULL
+        TXID = TXID if no delta else txid; OPAQUE and TRANSACTIONAL raise
+               when the stored TXID is ahead of txid (stale or reset txid)
+
+    A combiner computes CURR with ``combine_expr`` in that projection; a
+    ReducerAggregator folds ``agg.combine(base, rows)`` in python on the
+    rows not kept (:meth:`_fold`).
+    """
+
     def __init__(
         self,
         spark: SparkSession,
@@ -201,145 +213,75 @@ class ParquetMapState(MapState):
             self._pending = dict(manifest)  # empty batch: carry all forward
             return
         state = self._read_buckets(manifest, touched)
-
-        if not hasattr(agg, "zero_expr"):
-            # reducer path (ReducerStateAgg): the merge is a python fold —
-            # run the opaque/transactional protocol in an Arrow kernel over
-            # the same joined shape (plan identical, arithmetic in pandas)
-            out = self._python_merge(state, batch, agg, txid)
-            self._write_merged(out, manifest, touched)
-            batch.unpersist()
-            return
-
-        zero = agg.zero_expr().cast(self.value_type)
-        j = state.alias("s").join(batch.alias("b"), on=self.key_names, how="full_outer")
-        s_curr, s_prev, s_txid = F.col(CURR), F.col(PREV), F.col(TXID)
-        b = F.col("__b__").cast(self.value_type)
-        t = F.lit(txid)
-
-        stored = s_txid.isNotNull()
-        # Fail-fast (parity: OpaqueValue.java:44 "Current batch is behind
-        # state's batch"): a batch txid BEHIND the stored txid means the epoch
-        # counter was reset (fresh checkpoint against existing state);
-        # merging would corrupt the prev/curr replay chain silently.
-        stale = stored & b.isNotNull() & (s_txid > t)
-        stale_err = F.raise_error(
-            F.concat(
-                F.lit("Current batch ("),
-                t.cast("string"),
-                F.lit(") is behind state's batch ("),
-                s_txid.cast("string"),
-                F.lit("): refusing to update (stale/reset txid)"),
-            )
-        ).cast(self.value_type)
-        if self.state_type is StateType.OPAQUE:
-            new_curr = (
-                F.when(stale, stale_err)
-                .when(b.isNull(), s_curr)
-                .when(~stored, agg.combine_expr(zero, b))
-                .when(s_txid == t, agg.combine_expr(F.coalesce(s_prev, zero), b))
-                .otherwise(agg.combine_expr(s_curr, b))
-            )
-            new_prev = (
-                F.when(b.isNull(), s_prev)
-                .when(~stored, F.lit(None).cast(self.value_type))
-                .when(s_txid == t, s_prev)
-                .otherwise(s_curr)
-            )
-        elif self.state_type is StateType.TRANSACTIONAL:
-            new_curr = (
-                F.when(stale, stale_err)
-                .when(b.isNull(), s_curr)
-                .when(~stored, agg.combine_expr(zero, b))
-                .when(s_txid == t, s_curr)  # same txid replay: skip
-                .otherwise(agg.combine_expr(s_curr, b))
-            )
-            new_prev = F.lit(None).cast(self.value_type)
-        else:
-            new_curr = F.when(b.isNull(), s_curr).otherwise(
-                agg.combine_expr(F.coalesce(s_curr, zero), b)
-            )
-            new_prev = F.lit(None).cast(self.value_type)
-
-        new_txid = F.when(b.isNull(), s_txid).otherwise(t)
-        out = j.select(
-            *self.key_names,
-            new_curr.cast(self.value_type).alias(CURR),
-            new_prev.cast(self.value_type).alias(PREV),
+        j = state.join(batch, on=self.key_names, how="full_outer")
+        reducer = not hasattr(agg, "zero_expr")
+        b = F.col("__b__") if reducer else F.col("__b__").cast(self.value_type)
+        base, keep, prev, new_txid = self._replay_rule(b, txid)
+        cols = [
+            prev.cast(self.value_type).alias(PREV),
             new_txid.alias(TXID),
             self._bucket_col().alias(BUCKET),
-        )
+        ]
+        if reducer:
+            rule = j.select(
+                *self.key_names, CURR, base.alias("__base__"), keep.alias("__keep__"), b, *cols
+            )
+            out = self._fold(rule, agg)
+        else:
+            zero = agg.zero_expr().cast(self.value_type)
+            curr = F.when(keep, F.col(CURR)).otherwise(
+                agg.combine_expr(F.coalesce(base, zero), b)
+            )
+            out = j.select(*self.key_names, curr.cast(self.value_type).alias(CURR), *cols)
         self._write_merged(out, manifest, touched)
         batch.unpersist()
 
-    def _python_merge(self, state: DataFrame, batch: DataFrame, agg, txid: int) -> DataFrame:
-        """Opaque/transactional merge with a python ``agg.combine(curr, rows)``
-        fold (ReducerAggregator parity: MapReducerAggStateUpdater.java:36)."""
+    def _replay_rule(self, b: F.Column, txid: int) -> tuple[F.Column, ...]:
+        """The ``(base, keep, PREV, TXID)`` columns of the class docstring's
+        rule, for batch delta column ``b``."""
+        s_curr, s_prev, s_txid, t = F.col(CURR), F.col(PREV), F.col(TXID), F.lit(txid)
+        replay = s_txid.eqNullSafe(t)
+        opaque = self.state_type is StateType.OPAQUE
+        base = F.when(replay, s_prev).otherwise(s_curr) if opaque else s_curr
+        keep = b.isNull()
+        if self.state_type is StateType.TRANSACTIONAL:
+            keep = keep | replay
+        prev = F.when(keep, s_prev).otherwise(base) if opaque else F.lit(None)
+        new_txid = F.when(b.isNull(), s_txid)
+        if self.state_type is not StateType.NON_TRANSACTIONAL:
+            # parity: OpaqueValue.java:44 fail-fast on a stale/reset txid
+            stale = F.concat(
+                F.lit(f"Current batch ({txid}) is behind state's batch ("),
+                s_txid.cast("string"),
+                F.lit("): stale or reset txid"),
+            )
+            new_txid = new_txid.when(s_txid > t, F.raise_error(stale).cast("bigint"))
+        new_txid = new_txid.otherwise(t)
+        return base, keep, prev, new_txid
+
+    def _fold(self, rule: DataFrame, agg) -> DataFrame:
+        """Reducer path (ReducerStateAgg, parity: MapReducerAggStateUpdater.java:36):
+        fold ``agg.combine(base, rows)`` in python on the rows the rule does
+        not keep; every other column is the rule's."""
+        import numpy as np
         import pandas as pd
 
-        j = state.join(batch.drop(BUCKET), on=self.key_names, how="full_outer")
-        key_names = self.key_names
-        state_type = self.state_type
-        out_schema = self._full_schema()
-
-        def _null(v):
-            if v is None or isinstance(v, (list, dict)):
-                return v
-            try:
-                return None if pd.isna(v) else v
-            except (TypeError, ValueError):
-                return v
+        out_cols = [*self.key_names, CURR, PREV, TXID, BUCKET]
+        schema = self._full_schema().add(BUCKET, IntegerType())
 
         def kernel(batches):
             for pdf in batches:
-                curr_o, prev_o, tx_o = [], [], []
-                for i in range(len(pdf)):
-                    b = pdf["__b__"].iloc[i]
-                    has_delta = b is not None and len(b) > 0
-                    s_tx = pdf[TXID].iloc[i]
-                    stored = not pd.isna(s_tx)
-                    s_curr = _null(pdf[CURR].iloc[i])
-                    s_prev = _null(pdf[PREV].iloc[i])
-                    if not has_delta:
-                        curr_o.append(s_curr)
-                        prev_o.append(s_prev)
-                        tx_o.append(None if not stored else int(s_tx))
-                        continue
-                    rows = [dict(r) if not isinstance(r, dict) else r for r in b]
-                    if (
-                        stored
-                        and int(s_tx) > txid
-                        and state_type is not StateType.NON_TRANSACTIONAL
-                    ):
-                        # parity: OpaqueValue.java:44 fail-fast on reset txids
-                        raise ValueError(
-                            f"Current batch ({txid}) is behind state's batch "
-                            f"({int(s_tx)}): refusing to update (stale/reset txid)"
-                        )
-                    if state_type is StateType.OPAQUE:
-                        if not stored:
-                            curr, prev = agg.combine(None, rows), None
-                        elif int(s_tx) == txid:
-                            curr, prev = agg.combine(s_prev, rows), s_prev
-                        else:
-                            curr, prev = agg.combine(s_curr, rows), s_curr
-                    elif state_type is StateType.TRANSACTIONAL:
-                        if stored and int(s_tx) == txid:
-                            curr, prev = s_curr, None
-                        else:
-                            curr, prev = agg.combine(s_curr if stored else None, rows), None
-                    else:
-                        curr, prev = agg.combine(s_curr if stored else None, rows), None
-                    curr_o.append(curr)
-                    prev_o.append(prev)
-                    tx_o.append(txid)
-                out = pdf[key_names].copy()
-                out[CURR] = curr_o
-                out[PREV] = prev_o
-                out[TXID] = pd.array(tx_o, dtype="Int64")
-                yield out
+                curr = pdf[CURR].astype(object)
+                for i in np.flatnonzero(~pdf["__keep__"].to_numpy(bool)):
+                    base = pdf["__base__"].iat[i]
+                    if pd.api.types.is_scalar(base) and pd.isna(base):
+                        base = None
+                    rows = [r if isinstance(r, dict) else dict(r) for r in pdf["__b__"].iat[i]]
+                    curr.iat[i] = agg.combine(base, rows)
+                pdf[CURR] = curr
+                yield pdf[out_cols]
 
-        return j.mapInPandas(kernel, out_schema).withColumn(BUCKET, self._bucket_col())
+        return rule.mapInPandas(kernel, schema)
 
     def _write_merged(self, out: DataFrame, manifest: dict[str, int], touched: list[int]) -> None:
         seq = self._next_seq()

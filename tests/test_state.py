@@ -6,12 +6,14 @@ transactional maps, plus the same scripts against the parquet-backed scale
 state (set-oriented merge path).
 """
 
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from storm_spark.operations import Count
-from storm_spark.operations.base import ReducerAggregator
+from storm_spark.operations import Count, Sum
+from storm_spark.operations.base import ReducerAggregator, ReducerStateAgg
 from storm_spark.state import (
     MemoryMapState,
     OpaqueValue,
@@ -108,59 +110,107 @@ def _batch(spark, pairs):
     )
 
 
-def test_parquet_opaque_replay_with_changed_batch(spark, tmp_path):
-    """Opaque: replaying a txid with *different* batch content recomputes
-    from prev — the defining opaque-source guarantee (OpaqueMap.java:54-85)."""
-    st = ParquetMapState(
-        spark, str(tmp_path / "s1"), _key_schema(), "count", "bigint", StateType.OPAQUE, 4
+def _row_lists(spark, pairs):
+    """The reducer path's batch: each key's delta is its row list."""
+    return spark.createDataFrame(
+        [(k, [(v,)]) for k, v in pairs], "k string, __delta__ array<struct<n:bigint>>"
     )
-    agg = Count()
-    st.begin_commit(1)
-    st.update_from_agg(_batch(spark, [("a", 2), ("b", 1)]), agg, 1)
-    st.commit(1)
-    assert st.as_dict() == {("a",): 2, ("b",): 1}
-
-    st.begin_commit(2)
-    st.update_from_agg(_batch(spark, [("a", 3)]), agg, 2)
-    st.commit(2)
-    assert st.as_dict() == {("a",): 5, ("b",): 1}
-
-    # replay txid 2 with DIFFERENT content: a+10 instead of a+3, plus new key c
-    st.begin_commit(2)
-    st.update_from_agg(_batch(spark, [("a", 10), ("c", 7)]), agg, 2)
-    st.commit(2)
-    assert st.as_dict() == {("a",): 12, ("b",): 1, ("c",): 7}
-
-    # replay again with the original content: converges to the original result
-    st.begin_commit(2)
-    st.update_from_agg(_batch(spark, [("a", 3)]), agg, 2)
-    st.commit(2)
-    assert st.as_dict() == {("a",): 5, ("b",): 1, ("c",): 7}
 
 
-def test_parquet_transactional_replay_skips(spark, tmp_path):
-    st = ParquetMapState(
-        spark,
-        str(tmp_path / "s2"),
-        _key_schema(),
-        "count",
-        "bigint",
-        StateType.TRANSACTIONAL,
-        4,
-    )
-    agg = Count()
-    st.begin_commit(1)
-    st.update_from_agg(_batch(spark, [("a", 2)]), agg, 1)
-    st.commit(1)
-    st.begin_commit(2)
-    st.update_from_agg(_batch(spark, [("a", 3), ("b", 4)]), agg, 2)
-    st.commit(2)
-    assert st.as_dict() == {("a",): 5, ("b",): 4}
-    # identical replay of txid 2: stored txid matches -> skip
-    st.begin_commit(2)
-    st.update_from_agg(_batch(spark, [("a", 3), ("b", 4)]), agg, 2)
-    st.commit(2)
-    assert st.as_dict() == {("a",): 5, ("b",): 4}
+class SumReducer(ReducerAggregator):
+    """ReducerAggregator twin of ``Sum``: drives the reducer merge path with
+    values a combiner can be checked against."""
+
+    value_type = "bigint"
+
+    def init(self):
+        return 0
+
+    def reduce(self, curr, tup):
+        return curr + tup["n"]
+
+
+# one concatenated txid script per state type: new keys, an advance, an
+# opaque replay with changed content (plus a key new to the replay), then a
+# replay that drops that key and repeats the first attempt identically
+_REPLAY_SCRIPT = [
+    (1, {"a": 2, "b": 1}),
+    (2, {"a": 3}),
+    (2, {"a": 10, "c": 7}),
+    (2, {"a": 3}),
+]
+_REPLAY_EXPECTED = {
+    # opaque: a replay redoes the key from prev; a key the replay drops keeps
+    # its earlier contribution (replay idempotence is per key)
+    "OPAQUE": [
+        {"a": 2, "b": 1},
+        {"a": 5, "b": 1},
+        {"a": 12, "b": 1, "c": 7},
+        {"a": 5, "b": 1, "c": 7},
+    ],
+    # transactional: a key already stored under the txid is skipped; a key
+    # first seen in a replay still applies
+    "TRANSACTIONAL": [
+        {"a": 2, "b": 1},
+        {"a": 5, "b": 1},
+        {"a": 5, "b": 1, "c": 7},
+        {"a": 5, "b": 1, "c": 7},
+    ],
+    "NON_TRANSACTIONAL": [
+        {"a": 2, "b": 1},
+        {"a": 5, "b": 1},
+        {"a": 15, "b": 1, "c": 7},
+        {"a": 18, "b": 1, "c": 7},
+    ],
+}
+
+
+@pytest.mark.parametrize("state_type", list(_REPLAY_EXPECTED))
+def test_replay_rule_conformance(spark, tmp_path, state_type):
+    """One replay contract for every backend: MemoryMapState, ParquetMapState
+    with a combiner (``Sum``, the columnar merge) and ParquetMapState with a
+    ReducerAggregator (the python fold) hold the same state after every feed
+    of one scripted txid sequence, and agree on a txid behind the stored one
+    (OPAQUE/TRANSACTIONAL refuse it, NON_TRANSACTIONAL applies it)."""
+    stype = StateType[state_type]
+    ks = _key_schema()
+    backends = {
+        "memory": (MemoryMapState(ks, "total", "bigint", stype), Sum("bigint"), _batch),
+        "parquet": (
+            ParquetMapState(spark, str(tmp_path / "sum"), ks, "total", "bigint", stype, 2),
+            Sum("bigint"),
+            _batch,
+        ),
+        "parquet_reducer": (
+            ParquetMapState(spark, str(tmp_path / "red"), ks, "total", "bigint", stype, 2),
+            ReducerStateAgg(SumReducer(), ["n"]),
+            _row_lists,
+        ),
+    }
+
+    def feed(name, txid, deltas):
+        st, agg, batch = backends[name]
+        st.begin_commit(txid)
+        st.update_from_agg(batch(spark, list(deltas.items())), agg, txid)
+        st.commit(txid)
+        return {k[0]: v for k, v in st.as_dict().items()}
+
+    # the backends are independent states: feed them concurrently (the
+    # parquet merges are latency-bound small jobs)
+    with ThreadPoolExecutor(len(backends)) as pool:
+
+        def feed_all(txid, deltas):
+            futs = {n: pool.submit(feed, n, txid, deltas) for n in backends}
+            return {n: f.exception() or f.result() for n, f in futs.items()}
+
+        for (txid, deltas), want in zip(_REPLAY_SCRIPT, _REPLAY_EXPECTED[state_type]):
+            assert feed_all(txid, deltas) == dict.fromkeys(backends, want), (txid, deltas)
+        stale = feed_all(1, {"a": 1})
+    for name, got in stale.items():
+        if stype is StateType.NON_TRANSACTIONAL:
+            assert got["a"] == want["a"] + 1, name
+        else:
+            assert isinstance(got, Exception) and "behind" in str(got), (name, got)
 
 
 def test_parquet_multi_get(spark, tmp_path):

@@ -11,8 +11,10 @@ commits, replays (same or changed batch content), and skips:
 - reading an OpaqueValue under its own txid always yields the pre-txid value
   (read-your-writes isolation across a replay boundary).
 
-No SparkSession needed — the protocol is pure; the DataFrame form is the
-same logic as columns (covered by test_state.py).
+No SparkSession needed — the protocol is pure. The backends that apply it
+(MemoryMapState, and ParquetMapState's columnar form for combiners and
+reducers) are held to one scripted contract by
+``test_state.py::test_replay_rule_conformance``.
 """
 
 from hypothesis import given, settings
@@ -64,10 +66,7 @@ def test_transactional_skips_replayed_txids(run):
     tv = TransactionalValue(None, 0)
     applied = {}
     for txid, val in run:
-        # engine rule (TransactionalMap.java:66-76): apply only if stored
-        # txid differs
-        if tv.txid != txid:
-            tv = TransactionalValue(txid, val)
+        tv = tv.update(txid, val)
         applied.setdefault(txid, val)  # FIRST value per txid wins
     final_txid = run[-1][0]
     assert tv.val == applied[final_txid]
