@@ -185,6 +185,89 @@ def _time_chunked(
     return df.withColumn("__t__", tag)
 
 
+def _hash_thirds(frame: DataFrame, key) -> list[tuple[DataFrame]]:
+    """Three single-source rounds of ``frame`` split on ``pmod(key, 3)`` —
+    the deterministic hash epochs of the ``foreachBatch`` gates."""
+    return [(frame.filter(F.pmod(key, F.lit(3)) == b),) for b in range(3)]
+
+
+def _parity_rounds(e: DataFrame) -> list[tuple[DataFrame, DataFrame]]:
+    """The stream-stream join gates' rounds: each time tercile of ``e``
+    (:func:`_time_chunked` on ``ts``) as an (even-id, odd-id) pair of
+    left and right feeds."""
+    parts = _time_chunked(e, "ts")
+    return [
+        tuple(
+            parts.filter(F.col("__t__") == b)
+            .filter(F.col("event_id") % 2 == r)
+            .select(*e.columns)
+            for r in (0, 1)
+        )
+        for b in (1, 2, 3)
+    ]
+
+
+def _drive_stream_epochs(spark, rounds, sink, prefix, build=None):
+    """Run one REAL Structured Streaming query over parquet file sources,
+    round by round — the micro-batch driver every streaming gate shares
+    (Trident's batch coordinator as Spark triggers).
+
+    ``rounds`` is a list; each round holds one DataFrame per file source
+    (a stream-stream join reads two). ``build(*sources)`` turns the
+    streaming sources into the output — watermarks and the operator go
+    there (default: the single source as is). ``sink`` is a callable,
+    run as ``foreachBatch(sink)`` in update mode (returns None), or the
+    output mode of a memory sink, whose rows are returned as a table.
+    ``prefix`` names the scratch dir and the query.
+
+    The scaffold contract, for every gate:
+
+    - One file per trigger: each round frame is written as ONE parquet
+      file (``coalesce(1)``) and every source reads with
+      ``maxFilesPerTrigger=1``, so a round is exactly one micro-batch.
+    - Write-then-drain pins the trigger order: a round is written, then
+      drained by ``processAllAvailable()`` before the next is written.
+      The file source picks up new files in mtime order, so rounds
+      written up front would race the order that order-sensitive state
+      depends on. Watermark-advancing sentinel flushes are more rounds.
+    - Cleanup by sink kind: the query stops in ``finally``. After a
+      memory-sink run the scratch dir is deleted (the sink holds its rows
+      driver-side; feed and checkpoint are dead). After a
+      ``foreachBatch`` run it stays, because an absorber may keep lazy
+      frames over the feed files; the process-scoped ``gate_tmp`` root
+      removes it at exit."""
+    import os
+    import uuid
+
+    tmp = gate_tmp.mkdtemp(prefix="storm_spark_" + prefix)
+    dirs = [os.path.join(tmp, f"in{j}") for j in range(len(rounds[0]))]
+    sources = []
+    for d, frame in zip(dirs, rounds[0]):
+        os.makedirs(d)
+        sources.append(
+            spark.readStream.schema(frame.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(f"{d}/*")
+        )
+    out = (build or (lambda s: s))(*sources).writeStream
+    if callable(sink):
+        out = out.foreachBatch(sink).outputMode("update")
+    else:
+        out = out.format("memory").outputMode(sink)
+    qname = prefix + uuid.uuid4().hex[:8]
+    q = out.option("checkpointLocation", os.path.join(tmp, "ckpt")).queryName(qname).start()
+    try:
+        for i, frames in enumerate(rounds):
+            for d, frame in zip(dirs, frames):
+                frame.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, f"r{i}"))
+            q.processAllAvailable()
+    finally:
+        q.stop()
+        if not callable(sink):
+            shutil.rmtree(tmp, ignore_errors=True)
+    return None if callable(sink) else spark.table(qname)
+
+
 def cents(c) -> F.Column:
     """Exact integer cents from a 2-decimal double."""
     c = F.col(c) if isinstance(c, str) else c
@@ -950,8 +1033,8 @@ ORACLE_STREAMING_WORDCOUNT = ORACLE_STATE_WORDCOUNT
 def q_streaming_sessionize(spark, sf_dir):
     """The stateful-streaming twin run END-TO-END through real Structured
     Streaming, oracle-gated against the BATCH sessionize oracle: events
-    split into 3 event-time-ordered terciles → ``readStream`` (one file
-    per trigger) → ``stateful_sessionize`` (applyInPandasWithState,
+    split into 3 event-time-ordered terciles → ``readStream`` →
+    ``stateful_sessionize`` (applyInPandasWithState,
     event-time timeout) → memory sink; two far-future sentinel events
     (user −1) advance the watermark so every real session times out and
     emits. Per-user closed-session counts must equal the batch lag+cumsum
@@ -962,55 +1045,27 @@ def q_streaming_sessionize(spark, sf_dir):
     a continuation in the next tercile necessarily ends within ``gap`` of
     the tercile boundary, so its timeout is always AHEAD of the watermark
     the earlier batch can establish — no premature close, ever."""
-    import os
-    import uuid
     from datetime import timedelta
 
     from storm_spark.streaming.stateful import stateful_sessionize
 
     e = _events(spark, sf_dir).select("user_id", "ts", "event_id")
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_ssess_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     parts = _time_chunked(e, "ts")
     max_ts = e.agg(F.max("ts")).collect()[0][0]
     feed_schema = e.select("user_id", "ts").schema
-    qname = "ssess_" + uuid.uuid4().hex[:8]
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-    ).withWatermark("ts", "1 second")
-    out = stateful_sessionize(stream, "user_id", "ts", gap_seconds=1800)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
+    rounds = [(parts.filter(F.col("__t__") == b).select("user_id", "ts"),) for b in (1, 2, 3)]
+    rounds += [
+        (spark.createDataFrame([(-1, max_ts + timedelta(seconds=off))], feed_schema),)
+        for off in (3600, 7200)
+    ]
+    out = _drive_stream_epochs(
+        spark, rounds, "append", "ssess_",
+        build=lambda s: stateful_sessionize(
+            s.withWatermark("ts", "1 second"), "user_id", "ts", gap_seconds=1800
+        ),
     )
-    try:
-        # write-then-drain per tercile pins the trigger order (file-source
-        # listing order is mtime-based — racy for order-sensitive state)
-        for b in (1, 2, 3):
-            parts.filter(F.col("__t__") == b).select("user_id", "ts").coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(indir, f"b{b}"))
-            q.processAllAvailable()
-        for i, off in enumerate((3600, 7200)):
-            sent = spark.createDataFrame(
-                [(-1, max_ts + timedelta(seconds=off))], feed_schema
-            )
-            sent.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"s{i}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)  # memory sink holds the rows driver-side; feed/ckpt dirs are dead
     return (
-        spark.table(qname)
-        .filter(F.col("user_id") >= 0)
+        out.filter(F.col("user_id") >= 0)
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_sessions"))
     )
@@ -1529,15 +1584,9 @@ def q_streaming_cms(spark, sf_dir):
     (MapCombinerAggStateUpdater.java:35-80) with a sketch as the
     combinable value; the state is ≤ depth×width rows regardless of
     stream volume."""
-    import os
-    import uuid
-
     from storm_spark.functions.sketch import cms_build, cms_estimate
 
     orders = _t(spark, sf_dir, "orders")
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_scms_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     feed = orders.select("o_orderkey", "o_custkey")
     state = {"sk": None}
 
@@ -1555,25 +1604,7 @@ def q_streaming_cms(spark, sf_dir):
         )
         state["sk"] = merged.localCheckpoint()  # <= 1024 rows
 
-    q = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-        .writeStream.foreachBatch(absorb)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .queryName("scms_" + uuid.uuid4().hex[:8])
-        .start()
-    )
-    try:
-        chunk = F.pmod(F.xxhash64("o_orderkey"), F.lit(3))
-        for b in range(3):
-            feed.filter(chunk == b).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(indir, f"b{b}"))
-            q.processAllAvailable()
-    finally:
-        q.stop()
+    _drive_stream_epochs(spark, _hash_thirds(feed, F.xxhash64("o_orderkey")), absorb, "scms_")
     keys = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 50).select(
         F.col("c_custkey").alias("o_custkey")
     )
@@ -3496,15 +3527,9 @@ def q_streaming_percentile(spark, sf_dir):
     batch `percentile_exact` oracle VERBATIM — exact streaming quantiles,
     not a sketch approximation, with state bounded by the value DOMAIN
     (distinct cents), never the row count."""
-    import os
-    import uuid
-
     from storm_spark.functions.robust import percentiles_from_counts
 
     orders = _t(spark, sf_dir, "orders")
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_spct_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     feed = orders.select(
         "o_orderkey", "o_orderpriority", cents("o_totalprice").alias("v_c")
     )
@@ -3524,25 +3549,7 @@ def q_streaming_percentile(spark, sf_dir):
         )
         state["hist"] = merged.localCheckpoint()  # <= distinct (grp, cents)
 
-    q = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-        .writeStream.foreachBatch(absorb)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .queryName("spct_" + uuid.uuid4().hex[:8])
-        .start()
-    )
-    try:
-        chunk = F.pmod(F.xxhash64("o_orderkey"), F.lit(3))
-        for b in range(3):
-            feed.filter(chunk == b).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"b{b}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
+    _drive_stream_epochs(spark, _hash_thirds(feed, F.xxhash64("o_orderkey")), absorb, "spct_")
     out = percentiles_from_counts(
         state["hist"], ["o_orderpriority"], "v_c", "n", [0.5, 0.95, 0.99]
     )
@@ -3981,18 +3988,12 @@ def q_streaming_bm25(spark, sf_dir):
     This is Trident's persistentAggregate-then-stateQuery idiom with an
     inverted index as the state; per-epoch work is O(batch tokens), the
     postings state is O(matched docs × query terms)."""
-    import os
-    import uuid
-
     from storm_spark.functions.search import bm25_rank_from_index
     from storm_spark.functions.text import tokens as _tokens
 
     terms = ["join", "spark", "table", "window"]
     terms_lit = F.array(*[F.lit(t) for t in sorted(set(terms))])
     docs = _t(spark, sf_dir, "documents")
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_sbm_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     feed = docs.select("doc_id", "text")
     state = {"tf": None, "dl": None, "n": 0, "sumdl": 0}
 
@@ -4030,25 +4031,7 @@ def q_streaming_bm25(spark, sf_dir):
             edl if state["dl"] is None else state["dl"].unionByName(edl)
         ).localCheckpoint()
 
-    q = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-        .writeStream.foreachBatch(absorb)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .queryName("sbm_" + uuid.uuid4().hex[:8])
-        .start()
-    )
-    try:
-        chunk = F.pmod(F.xxhash64("doc_id"), F.lit(3))
-        for bch in range(3):
-            feed.filter(chunk == bch).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"b{bch}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
+    _drive_stream_epochs(spark, _hash_thirds(feed, F.xxhash64("doc_id")), absorb, "sbm_")
     # (n, avgdl) from the folded counters — bigint/bigint division is the
     # same double as F.avg's sum/count, so the tail sees identical inputs
     corpus = spark.range(1).select(
@@ -4229,10 +4212,7 @@ def q_streaming_tfidf(spark, sf_dir):
         ).localCheckpoint()
         state["n"] += batch_df.count()
 
-    _drive_stream_epochs(
-        spark, docs, absorb, "storm_spark_stfidf_",
-        chunk_expr=F.pmod(F.xxhash64("doc_id"), F.lit(3)),
-    )
+    _drive_stream_epochs(spark, _hash_thirds(docs, F.xxhash64("doc_id")), absorb, "stfidf_")
     n_docs = spark.range(1).select(F.lit(state["n"]).cast("bigint").alias("n_docs"))
     return tfidf_from_counts(state["tf"], n_docs, "doc_id", k=3)
 
@@ -4251,16 +4231,10 @@ def q_streaming_dsir(spark, sf_dir):
     the final top-50 satisfies the batch `dsir_sample` oracle VERBATIM.
     Per-epoch work is O(batch tokens); the per-epoch score trajectory
     (state at epoch k == batch over docs-so-far) is pinned in pytest."""
-    import os
-    import uuid
-
     from storm_spark.functions.text import dsir_scores_from_counts
     from storm_spark.functions.text import tokens as _tokens
 
     docs = _t(spark, sf_dir, "documents")
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_sdsir_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     feed = docs.select("doc_id", "text", "lang")
     state = {"model": None, "raw": None}
 
@@ -4294,25 +4268,7 @@ def q_streaming_dsir(spark, sf_dir):
             draw if state["raw"] is None else state["raw"].unionByName(draw)
         ).localCheckpoint()
 
-    q = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-        .writeStream.foreachBatch(absorb)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .queryName("sdsir_" + uuid.uuid4().hex[:8])
-        .start()
-    )
-    try:
-        chunk = F.pmod(F.xxhash64("doc_id"), F.lit(3))
-        for bch in range(3):
-            feed.filter(chunk == bch).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"b{bch}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
+    _drive_stream_epochs(spark, _hash_thirds(feed, F.xxhash64("doc_id")), absorb, "sdsir_")
     scored = dsir_scores_from_counts(state["model"], state["raw"], "doc_id")
     return scored.orderBy(F.col("dsir_n").desc(), F.col("doc_id").asc()).limit(50)
 
@@ -4864,9 +4820,6 @@ def q_streaming_psi(spark, sf_dir):
     epoch (pinned per-epoch against batch prefixes in pytest). This is
     the production shape for corpus-drift alerting: freeze bins at
     training time, fold each ingest batch, alert on the running PSI."""
-    import os
-    import uuid
-
     from storm_spark.functions.profile import psi_bin_counts, psi_from_histograms
 
     e = _events(spark, sf_dir).withColumn("v_c", cents("value"))
@@ -4875,9 +4828,6 @@ def q_streaming_psi(spark, sf_dir):
     ).select("bin", F.col("n").alias("n_old"))
     ref = ref.localCheckpoint()  # frozen at "training time" (≤ 10 rows)
 
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_spsi_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     feed = e.filter(F.col("user_id") % 2 == 1).select("event_id", "v_c")
     state = {"hist": None}
 
@@ -4893,25 +4843,7 @@ def q_streaming_psi(spark, sf_dir):
         )
         state["hist"] = merged.localCheckpoint()  # <= 10 rows
 
-    q = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-        .writeStream.foreachBatch(absorb)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .queryName("spsi_" + uuid.uuid4().hex[:8])
-        .start()
-    )
-    try:
-        chunk = F.pmod(F.xxhash64("event_id"), F.lit(3))
-        for b in range(3):
-            feed.filter(chunk == b).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"b{b}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
+    _drive_stream_epochs(spark, _hash_thirds(feed, F.xxhash64("event_id")), absorb, "spsi_")
     cur = state["hist"].select("bin", F.col("n").alias("n_new"))
     return psi_from_histograms(ref, cur, spark, n_bins=10)
 
@@ -5024,8 +4956,6 @@ def q_streaming_merge_intervals(spark, sf_dir):
     once the sentinel-advanced watermark passes its end. Output must
     equal the batch operator's oracle exactly — state is ONE open span
     per key regardless of stream length."""
-    import os
-    import uuid
     from datetime import timedelta
 
     from storm_spark.streaming.stateful import stateful_merge_intervals
@@ -5044,53 +4974,23 @@ def q_streaming_merge_intervals(spark, sf_dir):
         "event_id",
     )
     max_ts = e.agg(F.max("s_ts")).collect()[0][0]  # 1-row driver fetch
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_smi_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     parts = _time_chunked(e, "s_ts")
     feed_cols = ["user_id", "s_ts", "e_ts"]
     feed_schema = e.select(*feed_cols).schema
-    qname = "smi_" + uuid.uuid4().hex[:8]
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-    ).withWatermark("s_ts", "1 second")
-    out = stateful_merge_intervals(stream, "user_id", "s_ts", "e_ts")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
+    rounds = [(parts.filter(F.col("__t__") == b).select(*feed_cols),) for b in (1, 2, 3)]
+    sentinel_ts = [max_ts + timedelta(days=d) for d in (1, 2)]
+    rounds += [(spark.createDataFrame([(-1, t, t)], feed_schema),) for t in sentinel_ts]
+    out = _drive_stream_epochs(
+        spark, rounds, "append", "smi_",
+        build=lambda s: stateful_merge_intervals(
+            s.withWatermark("s_ts", "1 second"), "user_id", "s_ts", "e_ts"
+        ),
     )
-    try:
-        for b in (1, 2, 3):
-            parts.filter(F.col("__t__") == b).select(*feed_cols).coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(indir, f"b{b}"))
-            q.processAllAvailable()
-        for i, off in enumerate((3600, 7200)):
-            sent = spark.createDataFrame(
-                [(-1, max_ts + timedelta(days=1 + i), max_ts + timedelta(days=1 + i))],
-                feed_schema,
-            )
-            sent.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"s{i}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)  # memory sink is driver-side
-    return (
-        spark.table(qname)
-        .filter(F.col("user_id") >= 0)
-        .select(
-            "user_id",
-            F.col("span_start").cast("bigint").alias("span_start_s"),
-            F.col("span_end").cast("bigint").alias("span_end_s"),
-            "n_intervals",
-        )
+    return out.filter(F.col("user_id") >= 0).select(
+        "user_id",
+        F.col("span_start").cast("bigint").alias("span_start_s"),
+        F.col("span_end").cast("bigint").alias("span_end_s"),
+        "n_intervals",
     )
 
 
@@ -5688,54 +5588,27 @@ def q_streaming_transitions(spark, sf_dir):
     """stateful_transitions run END-TO-END through Structured Streaming and
     gated against the BATCH event_transitions oracle: events split into 3
     event-time-ordered terciles (each written SORTED by (ts, event_id) so
-    equal-ts ties fold in the same order as the batch lag), one file per
-    trigger; per-batch transition DELTAS from the memory sink sum to the
+    equal-ts ties fold in the same order as the batch lag); per-batch
+    transition DELTAS from the memory sink sum to the
     corpus totals — including the batch-boundary transitions a per-batch
     lag() loses, which is the whole point of the keyed state."""
-    import os
-    import uuid
-
     from storm_spark.streaming.stateful import stateful_transitions
 
     e = _events(spark, sf_dir).select("user_id", "ts", "event_type", "event_id")
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_strans_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     parts = _time_chunked(e, "ts")
-    feed_schema = e.select("user_id", "ts", "event_type").schema
-    qname = "strans_" + uuid.uuid4().hex[:8]
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
+    rounds = [
+        (
+            parts.filter(F.col("__t__") == b)
+            .orderBy("ts", "event_id")
+            .select("user_id", "ts", "event_type"),
+        )
+        for b in (1, 2, 3)
+    ]
+    out = _drive_stream_epochs(
+        spark, rounds, "update", "strans_",
+        build=lambda s: stateful_transitions(s, "user_id", "ts", "event_type"),
     )
-    out = stateful_transitions(stream, "user_id", "ts", "event_type")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
-    )
-    try:
-        for b in (1, 2, 3):
-            (
-                parts.filter(F.col("__t__") == b)
-                .orderBy("ts", "event_id")
-                .select("user_id", "ts", "event_type")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(indir, f"b{b}"))
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)  # memory sink holds the rows driver-side; feed/ckpt dirs are dead
-    return (
-        spark.table(qname)
-        .groupBy("from_type", "to_type")
-        .agg(F.sum("n").cast("bigint").alias("n"))
-    )
+    return out.groupBy("from_type", "to_type").agg(F.sum("n").cast("bigint").alias("n"))
 
 
 # gated against the BATCH oracle — streaming deltas must sum to it exactly
@@ -5753,64 +5626,30 @@ def q_streaming_window_hourly(spark, sf_dir):
     the watermark past its end — no partial emission; far-future
     sentinels close the final windows. Union of emissions must equal the
     batch hour×type grid exactly."""
-    import os
-    import uuid
+    from datetime import timedelta
 
     e = _events(spark, sf_dir).select("event_type", "ts", cents("value").alias("v_c"))
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_swh_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     parts = _time_chunked(e, "ts")
     max_ts = e.agg(F.max("ts")).collect()[0][0]
-    feed_schema = e.schema
-    qname = "swh_" + uuid.uuid4().hex[:8]
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-    ).withWatermark("ts", "1 second")
-    agg = (
-        stream.groupBy(F.window("ts", "1 hour"), "event_type")
+    rounds = [(parts.filter(F.col("__t__") == b).select(*e.columns),) for b in (1, 2, 3)]
+    rounds += [
+        (spark.createDataFrame([("__sentinel__", max_ts + timedelta(seconds=off), 0)], e.schema),)
+        for off in (7200, 14400)
+    ]
+    out = _drive_stream_epochs(
+        spark, rounds, "append", "swh_",
+        build=lambda s: s.withWatermark("ts", "1 second")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("v_c").cast("bigint").alias("value_c"),
-        )
+        ),
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
-    )
-    try:
-        from datetime import timedelta
-
-        for b in (1, 2, 3):
-            parts.filter(F.col("__t__") == b).select(*e.columns).coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(indir, f"b{b}"))
-            q.processAllAvailable()
-        for i, off in enumerate((7200, 14400)):
-            sent = spark.createDataFrame(
-                [("__sentinel__", max_ts + timedelta(seconds=off), 0)], feed_schema
-            )
-            sent.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"s{i}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)  # memory sink holds the rows driver-side
-    return (
-        spark.table(qname)
-        .filter(F.col("event_type") != "__sentinel__")
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("hour_epoch"),
-            "event_type",
-            "n",
-            "value_c",
-        )
+    return out.filter(F.col("event_type") != "__sentinel__").select(
+        F.unix_timestamp(F.col("window.start")).alias("hour_epoch"),
+        "event_type",
+        "n",
+        "value_c",
     )
 
 
@@ -5827,8 +5666,6 @@ def q_streaming_topk(spark, sf_dir):
     checkpointed streaming state instead of a per-batch PriorityQueue.
     Top-k merge commutes, so the time-ordered feed only matters for the
     watermark's late-row drop rule, not the ranking itself."""
-    import os
-    import uuid
     from datetime import timedelta
 
     from storm_spark.streaming.stateful import stateful_topk
@@ -5842,51 +5679,23 @@ def q_streaming_topk(spark, sf_dir):
         "l_orderkey",
         "l_linenumber",
     )
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_stopk_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     parts = _time_chunked(li, "ts")
     max_ts = li.agg(F.max("ts")).collect()[0][0]
-    feed_schema = li.schema
-    qname = "stopk_" + uuid.uuid4().hex[:8]
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-    ).withWatermark("ts", "1 second")
-    out = stateful_topk(
-        stream, "l_returnflag", "ts", "price_c",
-        ["l_orderkey", "l_linenumber"], k=3,
-        flush_at_ts=max_ts.timestamp(),
+    rounds = [(parts.filter(F.col("__t__") == b).select(*li.columns),) for b in (1, 2, 3)]
+    rounds += [
+        (spark.createDataFrame([("__s__", max_ts + timedelta(seconds=off), 0, 0, 0)], li.schema),)
+        for off in (3600, 7200)
+    ]
+    out = _drive_stream_epochs(
+        spark, rounds, "append", "stopk_",
+        build=lambda s: stateful_topk(
+            s.withWatermark("ts", "1 second"), "l_returnflag", "ts", "price_c",
+            ["l_orderkey", "l_linenumber"], k=3,
+            flush_at_ts=max_ts.timestamp(),
+        ),
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
-    )
-    try:
-        for b in (1, 2, 3):
-            parts.filter(F.col("__t__") == b).select(*li.columns).coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(indir, f"b{b}"))
-            q.processAllAvailable()
-        for i, off in enumerate((3600, 7200)):
-            sent = spark.createDataFrame(
-                [("__s__", max_ts + timedelta(seconds=off), 0, 0, 0)], feed_schema
-            )
-            sent.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"s{i}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)  # memory sink holds the rows driver-side
-    return (
-        spark.table(qname)
-        .filter(F.col("l_returnflag") != "__s__")
-        .select("l_returnflag", "l_orderkey", "l_linenumber", "price_c", "rank")
+    return out.filter(F.col("l_returnflag") != "__s__").select(
+        "l_returnflag", "l_orderkey", "l_linenumber", "price_c", "rank"
     )
 
 
@@ -5910,58 +5719,17 @@ def q_streaming_interval_join(spark, sf_dir):
     micro-batch where both sides are present (no close-out sentinels
     needed — emission doesn't wait for the watermark, only state expiry
     does). Output: per-user pair counts, equal to the batch join."""
-    import os
-    import uuid
-
     from storm_spark.streaming.joins import interval_join
 
     e = _events(spark, sf_dir).select("user_id", "ts", "event_id")
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_sij_")
-    left_dir = os.path.join(tmp, "left")
-    right_dir = os.path.join(tmp, "right")
-    os.makedirs(left_dir)
-    os.makedirs(right_dir)
-    parts = _time_chunked(e, "ts")
-    feed_schema = e.schema
-    qname = "sij_" + uuid.uuid4().hex[:8]
-    left = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{left_dir}/*")
-    ).withWatermark("ts", "1 second")
-    right = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{right_dir}/*")
-    ).withWatermark("ts", "1 second")
-    joined = interval_join(
-        left, right, "user_id", "ts", lower_seconds=0, upper_seconds=3600
-    ).select("user_id", "event_id", F.col("event_id_r"))
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
+    out = _drive_stream_epochs(
+        spark, _parity_rounds(e), "append", "sij_",
+        build=lambda left, right: interval_join(
+            left.withWatermark("ts", "1 second"), right.withWatermark("ts", "1 second"),
+            "user_id", "ts", lower_seconds=0, upper_seconds=3600,
+        ).select("user_id", "event_id", F.col("event_id_r")),
     )
-    try:
-        for b in (1, 2, 3):
-            tb = parts.filter(F.col("__t__") == b)
-            tb.filter(F.col("event_id") % 2 == 0).select(*e.columns).coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(left_dir, f"b{b}"))
-            tb.filter(F.col("event_id") % 2 == 1).select(*e.columns).coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(right_dir, f"b{b}"))
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)  # memory sink holds the rows driver-side
-    return (
-        spark.table(qname)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
-    )
+    return out.groupBy("user_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
 
 
 ORACLE_STREAMING_INTERVAL_JOIN = """
@@ -5987,9 +5755,6 @@ def q_streaming_gap_fill(spark, sf_dir):
     wrong #1; it survived the r9 ntile sweep because it wasn't ntile).
     Union of per-trigger emissions must equal the batch grid exactly
     (every bucket exactly once, same fills, same gaps)."""
-    import os
-    import uuid
-
     from storm_spark.streaming.stateful import stateful_gap_fill
 
     e = _events(spark, sf_dir).select(
@@ -6005,38 +5770,15 @@ def q_streaming_gap_fill(spark, sf_dir):
         "__bts__",
         distinct_values=True,
     )
-    feed_schema = e.select("event_type", "ts", "v_c").schema
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_sgap_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
-    qname = "sgap_" + uuid.uuid4().hex[:8]
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
+    rounds = [
+        (parts.filter(F.col("__t__") == b).select("event_type", "ts", "v_c"),)
+        for b in (1, 2, 3)
+    ]
+    out = _drive_stream_epochs(
+        spark, rounds, "update", "sgap_",
+        build=lambda s: stateful_gap_fill(s, "event_type", "ts", "v_c", step_seconds=3600),
     )
-    out = stateful_gap_fill(stream, "event_type", "ts", "v_c", step_seconds=3600)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
-    )
-    try:
-        for b in (1, 2, 3):
-            (
-                parts.filter(F.col("__t__") == b)
-                .select("event_type", "ts", "v_c")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(indir, f"b{b}"))
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)  # memory sink holds the rows driver-side; feed/ckpt dirs are dead
-    return spark.table(qname).select(
+    return out.select(
         "event_type",
         "bucket",
         F.col("value").cast("bigint").alias("value_c"),
@@ -6056,56 +5798,31 @@ def q_streaming_trailing_zscore(spark, sf_dir):
     ordered and each file is written sorted, so ties fold exactly like
     the batch ROWS frame. Compared on (user, epoch-second, value, z) for
     |z| > 3 — the same anomaly set as the batch gate."""
-    import os
-    import uuid
-
     from storm_spark.streaming.stateful import stateful_trailing_zscore
 
     e = _events(spark, sf_dir).select(
         "user_id", "ts", "event_id", cents("value").cast("double").alias("v_c")
     )
     parts = _time_chunked(e, "ts")
-    feed_schema = e.select("user_id", "ts", "v_c").schema
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_stz_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
-    qname = "stz_" + uuid.uuid4().hex[:8]
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-    )
-    out = stateful_trailing_zscore(stream, "user_id", "ts", "v_c", window=24, min_periods=8)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
-    )
-    try:
-        for b in (1, 2, 3):
-            (
-                parts.filter(F.col("__t__") == b)
-                .orderBy("ts", "event_id")
-                .select("user_id", "ts", "v_c")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(indir, f"b{b}"))
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)  # memory sink holds the rows driver-side; feed/ckpt dirs are dead
-    return (
-        spark.table(qname)
-        .filter(F.abs(F.col("z")) > 3)
-        .select(
-            "user_id",
-            F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 1000000").alias("ts_s"),
-            F.col("v_c").cast("bigint").alias("v_c"),
-            F.round("z", 6).alias("z"),
+    rounds = [
+        (
+            parts.filter(F.col("__t__") == b)
+            .orderBy("ts", "event_id")
+            .select("user_id", "ts", "v_c"),
         )
+        for b in (1, 2, 3)
+    ]
+    out = _drive_stream_epochs(
+        spark, rounds, "update", "stz_",
+        build=lambda s: stateful_trailing_zscore(
+            s, "user_id", "ts", "v_c", window=24, min_periods=8
+        ),
+    )
+    return out.filter(F.abs(F.col("z")) > 3).select(
+        "user_id",
+        F.expr("unix_micros(CAST(ts AS TIMESTAMP)) div 1000000").alias("ts_s"),
+        F.col("v_c").cast("bigint").alias("v_c"),
+        F.round("z", 6).alias("z"),
     )
 
 
@@ -6142,9 +5859,6 @@ def q_streaming_dedup(spark, sf_dir):
     — the stream must emit exactly the first arrival per content
     fingerprint. Oracle: min doc_id per fingerprint over the full feed
     (originals carry the smaller ids, so first arrival = min id)."""
-    import os
-    import uuid
-
     from storm_spark.streaming.dedup import streaming_dedup_fingerprint
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -6158,43 +5872,22 @@ def q_streaming_dedup(spark, sf_dir):
             Window.partitionBy(text.fingerprint("text")).orderBy("doc_id")
         ),
     )
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_sdd_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
-    qname = "sdd_" + uuid.uuid4().hex[:8]
-    feed_schema = docs.select("doc_id", "text").schema
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-    )
-    out = streaming_dedup_fingerprint(stream, "text")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
-    )
-    try:
-        feeds = (
-            docs.filter(F.col("__rn__") == 1).select("doc_id", "text"),
+    rounds = [
+        (docs.filter(F.col("__rn__") == 1).select("doc_id", "text"),),
+        (
             docs.filter(F.col("__rn__") > 1)
             .select("doc_id", "text")
             .unionByName(
                 docs.select((F.col("doc_id") + F.lit(1_000_000)).alias("doc_id"), "text")
             ),
-            docs.select((F.col("doc_id") + F.lit(2_000_000)).alias("doc_id"), "text"),
-        )
-        for b, feed in enumerate(feeds, start=1):
-            feed.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"b{b}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)  # memory sink holds the rows driver-side; feed/ckpt dirs are dead
-    return spark.table(qname).select("doc_id").orderBy("doc_id")
+        ),
+        (docs.select((F.col("doc_id") + F.lit(2_000_000)).alias("doc_id"), "text"),),
+    ]
+    out = _drive_stream_epochs(
+        spark, rounds, "append", "sdd_",
+        build=lambda s: streaming_dedup_fingerprint(s, "text"),
+    )
+    return out.select("doc_id").orderBy("doc_id")
 
 
 ORACLE_STREAMING_DEDUP = """
@@ -7458,20 +7151,15 @@ def q_streaming_ann_ingest(spark, sf_dir):
     `ann_ivf_pq` oracle verbatim — streaming ingestion is invisible in
     the answer, like ann_index_update's batch absorbs."""
     import os
-    import uuid
 
     emb = _t(spark, sf_dir, "embeddings")
     cbs = similarity.pq_codebooks(emb, "vec_id", "embedding", m=4, ksub=4, n_iters=1)
     cents = similarity._ivf_default_centroids(emb, "vec_id", "embedding", 4)
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_sann_")
-    path = os.path.join(tmp, "idx")
+    path = os.path.join(gate_tmp.mkdtemp(prefix="storm_spark_sann_"), "idx")
     third = F.pmod(F.col("vec_id"), F.lit(3))
     idx = similarity.IVFPQIndex(path, "vec_id", "embedding").build(
         emb.filter(third == 0), m=4, ksub=4, n_lists=4, centroids=cents, codebooks=cbs
     )
-
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     feed = emb.select("vec_id", "embedding")
 
     def absorb(batch_df, epoch_id):
@@ -7479,24 +7167,7 @@ def q_streaming_ann_ingest(spark, sf_dir):
             return
         idx.add_vectors(batch_df)
 
-    q = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-        .writeStream.foreachBatch(absorb)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .queryName("sann_" + uuid.uuid4().hex[:8])
-        .start()
-    )
-    try:
-        for b in (1, 2):
-            feed.filter(third == b).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"b{b}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
+    _drive_stream_epochs(spark, [(feed.filter(third == b),) for b in (1, 2)], absorb, "sann_")
     queries = emb.filter(F.col("vec_id") < 20)
     return idx.search(queries, k=5, n_probe=2, shortlist=20)
 
@@ -7613,8 +7284,6 @@ def q_streaming_sample(spark, sf_dir):
     time-ordered-source contract is needed. The curation move this
     enables: a bounded per-domain sample maintained live as the crawl
     streams in, identical to what a batch re-run would pick."""
-    import os
-    import uuid
     from datetime import timedelta
 
     from storm_spark.streaming.stateful import stateful_topk
@@ -7639,50 +7308,22 @@ def q_streaming_sample(spark, sf_dir):
             ).cast("bigint")
         ).alias("neg_hash"),
     )
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_ssmp_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     parts = _time_chunked(e, "ts")
     max_ts = e.agg(F.max("ts")).collect()[0][0]
-    feed_schema = e.schema
-    qname = "ssmp_" + uuid.uuid4().hex[:8]
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-    ).withWatermark("ts", "1 second")
-    out = stateful_topk(
-        stream, "event_type", "ts", "neg_hash", ["event_id"], k=20,
-        flush_at_ts=max_ts.timestamp(),
+    rounds = [(parts.filter(F.col("__t__") == b).select(*e.columns),) for b in (1, 2, 3)]
+    rounds += [
+        (spark.createDataFrame([("__s__", max_ts + timedelta(seconds=off), 0, 0)], e.schema),)
+        for off in (3600, 7200)
+    ]
+    out = _drive_stream_epochs(
+        spark, rounds, "append", "ssmp_",
+        build=lambda s: stateful_topk(
+            s.withWatermark("ts", "1 second"), "event_type", "ts", "neg_hash",
+            ["event_id"], k=20, flush_at_ts=max_ts.timestamp(),
+        ),
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
-    )
-    try:
-        for b in (1, 2, 3):
-            parts.filter(F.col("__t__") == b).select(*e.columns).coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(indir, f"b{b}"))
-            q.processAllAvailable()
-        for i, off in enumerate((3600, 7200)):
-            sent = spark.createDataFrame(
-                [("__s__", max_ts + timedelta(seconds=off), 0, 0)], feed_schema
-            )
-            sent.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"s{i}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)  # memory sink is driver-side
-    return (
-        spark.table(qname)
-        .filter(F.col("event_type") != "__s__")
-        .select("event_type", "event_id", F.col("rank").cast("int").alias("rank"))
+    return out.filter(F.col("event_type") != "__s__").select(
+        "event_type", "event_id", F.col("rank").cast("int").alias("rank")
     )
 
 
@@ -7755,17 +7396,11 @@ def q_streaming_hll(spark, sf_dir):
     over all rows — the streaming twin satisfies `hll_distinct`'s exact
     oracle verbatim (the streaming_cms argument with max for sum). State
     is ≤ groups×512 rows regardless of stream volume."""
-    import os
-    import uuid
-
-    from storm_spark.functions.sketch import hll_registers
+    from storm_spark.functions.sketch import hll_estimate, hll_registers
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_returnflag", "l_partkey"
     )
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_shll_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
     state = {"regs": None}
 
     def absorb(batch_df, epoch_id):
@@ -7780,29 +7415,11 @@ def q_streaming_hll(spark, sf_dir):
         )
         state["regs"] = merged.localCheckpoint()  # <= groups x 512 rows
 
-    q = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-        .writeStream.foreachBatch(absorb)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .queryName("shll_" + uuid.uuid4().hex[:8])
-        .start()
+    _drive_stream_epochs(
+        spark, _hash_thirds(li, F.xxhash64("l_orderkey", "l_linenumber")), absorb, "shll_"
     )
-    try:
-        chunk = F.pmod(F.xxhash64("l_orderkey", "l_linenumber"), F.lit(3))
-        for b in range(3):
-            li.filter(chunk == b).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"b{b}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
     # shared estimator over the merged registers — the streaming gate
     # satisfies hll_distinct's EXACT oracle verbatim
-    from storm_spark.functions.sketch import hll_estimate
-
     return hll_estimate(state["regs"], "l_returnflag")
 
 
@@ -7893,90 +7510,22 @@ def q_streaming_bfs_incremental(spark, sf_dir):
     must equal the from-scratch batch BFS (the same recursive-CTE oracle
     as `graph_bfs`) — incremental maintenance is invisible in the answer,
     only in the per-epoch cost."""
-    import os
-    import uuid
-
     from storm_spark.functions.mining import IncrementalBFS
 
     edges = bounded_persist(
         _copurchase_edges(spark, sf_dir), "queries.sbfs.copurchase"
     )
     seeds = edges.agg(F.min("src").alias("node"))
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_sbfs_")
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
-    feed_schema = edges.select("src", "dst").schema
-
     bfs = IncrementalBFS(seeds, "node", max_hops=4)
-    stream = (
-        spark.readStream.schema(feed_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
+    _drive_stream_epochs(
+        spark,
+        _hash_thirds(edges.select("src", "dst"), F.xxhash64("src", "dst")),
+        lambda batch_df, epoch_id: bfs.add_edges(batch_df, "src", "dst"),
+        "sbfs_",
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, epoch_id: bfs.add_edges(batch_df, "src", "dst")
-        )
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .queryName("sbfs_" + uuid.uuid4().hex[:8])
-        .start()
-    )
-    try:
-        chunk = F.pmod(F.xxhash64("src", "dst"), F.lit(3))
-        for b in range(3):
-            edges.filter(chunk == b).select("src", "dst").coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(indir, f"b{b}"))
-            q.processAllAvailable()
-    finally:
-        q.stop()
     return bfs.dist().select(
         F.col("node").cast("bigint").alias("node"), F.col("dist").cast("int")
     )
-
-
-def _drive_stream_epochs(spark, feed, absorb, prefix, chunk_expr=None, cleanup=None):
-    """Shared scaffold for the incremental-dedup streaming gates (factored
-    in r9 — four gates carried near-verbatim copies): write ``feed`` in
-    three deterministic hash epochs into a fresh directory consumed by a
-    REAL ``readStream`` + ``foreachBatch`` stream, calling
-    ``absorb(batch_df, epoch_id)`` once per epoch (write-then-drain pins
-    the trigger order; maxFilesPerTrigger=1 keeps one epoch per batch).
-    ``chunk_expr`` defaults to ``pmod(hash(doc_id), 3)``; ``cleanup``
-    runs in the finally block after the stream stops (e.g. DROP TABLE
-    for the bucketed index)."""
-    import os
-    import uuid
-
-    tmp = gate_tmp.mkdtemp(prefix=prefix)
-    indir = os.path.join(tmp, "in")
-    os.makedirs(indir)
-    stream = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{indir}/*")
-    )
-    q = (
-        stream.writeStream.foreachBatch(absorb)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .queryName(prefix + uuid.uuid4().hex[:8])
-        .start()
-    )
-    try:
-        chunk = (
-            chunk_expr if chunk_expr is not None else F.pmod(F.hash("doc_id"), F.lit(3))
-        )
-        for b in range(3):
-            feed.filter(chunk == b).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(indir, f"b{b}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        if cleanup is not None:
-            cleanup()
 
 
 def q_streaming_dedup_cluster(spark, sf_dir):
@@ -8003,10 +7552,9 @@ def q_streaming_dedup_cluster(spark, sf_dir):
     cc = IncrementalComponents()
     _drive_stream_epochs(
         spark,
-        pairs.select("id_a", "id_b"),
+        _hash_thirds(pairs.select("id_a", "id_b"), F.xxhash64("id_a", "id_b")),
         lambda batch_df, epoch_id: cc.add_edges(batch_df, "id_a", "id_b"),
-        "storm_spark_sdcl_",
-        chunk_expr=F.pmod(F.xxhash64("id_a", "id_b"), F.lit(3)),
+        "sdcl_",
     )
     return cc.labels().select(
         F.col("id").cast("bigint").alias("doc_id"),
@@ -8038,9 +7586,9 @@ def q_streaming_dedup_pipeline(spark, sf_dir):
     cc = IncrementalComponents()
     _drive_stream_epochs(
         spark,
-        docs,
+        _hash_thirds(docs, F.hash("doc_id")),
         lambda batch_df, epoch_id: cc.add_edges(idx.add_docs(batch_df), "id_a", "id_b"),
-        "storm_spark_sdpl_",
+        "sdpl_",
     )
     return cc.labels().select(
         F.col("id").cast("bigint").alias("doc_id"),
@@ -8080,16 +7628,18 @@ def q_streaming_dedup_pipeline_bucketed(spark, sf_dir):
         ),
     )
     cc = IncrementalComponents()
-    _drive_stream_epochs(
-        spark,
-        docs,
-        lambda batch_df, epoch_id: cc.add_edges(idx.add_docs(batch_df), "id_a", "id_b"),
-        "storm_spark_sdplb_",
+    try:
+        _drive_stream_epochs(
+            spark,
+            _hash_thirds(docs, F.hash("doc_id")),
+            lambda batch_df, epoch_id: cc.add_edges(idx.add_docs(batch_df), "id_a", "id_b"),
+            "sdplb_",
+        )
+    finally:
         # pairs/labels are localCheckpoint-materialized, so the index
         # table can go as soon as the stream stops — don't leak
         # metastore entries across gates
-        cleanup=idx.drop_tables,
-    )
+        idx.drop_tables()
     return cc.labels().select(
         F.col("id").cast("bigint").alias("doc_id"),
         F.col("cluster_id").cast("bigint").alias("cluster_id"),
@@ -8130,13 +7680,15 @@ def q_streaming_dedup_pipeline_stars(spark, sf_dir):
         emit="edges",
     )
     cc = IncrementalComponents()
-    _drive_stream_epochs(
-        spark,
-        docs,
-        lambda batch_df, epoch_id: cc.add_edges(idx.add_docs(batch_df), "id_a", "id_b"),
-        "storm_spark_sdpls_",
-        cleanup=idx.drop_tables,
-    )
+    try:
+        _drive_stream_epochs(
+            spark,
+            _hash_thirds(docs, F.hash("doc_id")),
+            lambda batch_df, epoch_id: cc.add_edges(idx.add_docs(batch_df), "id_a", "id_b"),
+            "sdpls_",
+        )
+    finally:
+        idx.drop_tables()
     return cc.labels().select(
         F.col("id").cast("bigint").alias("doc_id"),
         F.col("cluster_id").cast("bigint").alias("cluster_id"),
@@ -8170,7 +7722,7 @@ def q_streaming_dedup_merge(spark, sf_dir):
         cc.add_edges(pairs, "id_a", "id_b")
         surv.absorb(batch_df, cc.labels(), cc.last_fold())
 
-    _drive_stream_epochs(spark, docs, absorb, "storm_spark_sdm_")
+    _drive_stream_epochs(spark, _hash_thirds(docs, F.hash("doc_id")), absorb, "sdm_")
     return surv.canonical()
 
 
@@ -8240,7 +7792,7 @@ def q_streaming_pretrain_pipeline(spark, sf_dir, reselect_every=2, on_checkpoint
                 # the cadence is a real mid-stream cost, not a lazy no-op
                 chk.localCheckpoint()
 
-    _drive_stream_epochs(spark, docs, absorb, "storm_spark_spp_")
+    _drive_stream_epochs(spark, _hash_thirds(docs, F.hash("doc_id")), absorb, "spp_")
     all_clean = seen[0]
     for s in seen[1:]:
         all_clean = all_clean.unionByName(s)
@@ -8345,7 +7897,7 @@ def q_streaming_leakage_split(spark, sf_dir):
         seen.append(b)
         cc.add_edges(idx.add_docs(b), "id_a", "id_b")
 
-    _drive_stream_epochs(spark, docs, absorb, "storm_spark_slsp_")
+    _drive_stream_epochs(spark, _hash_thirds(docs, F.hash("doc_id")), absorb, "slsp_")
     all_docs = seen[0]
     for s in seen[1:]:
         all_docs = all_docs.unionByName(s)
@@ -8407,9 +7959,6 @@ def q_streaming_enrich(spark, sf_dir):
     with INTEGER arithmetic only (v·n > 2·Σv — no doubles, engine-exact);
     output is per-user spike counts, equal to the batch join by
     construction since the join is stateless across batches."""
-    import os
-    import uuid
-
     from storm_spark.streaming.joins import static_enrich
 
     e = _events(spark, sf_dir).select("user_id", "ts", "event_id", "value")
@@ -8421,41 +7970,17 @@ def q_streaming_enrich(spark, sf_dir):
             F.sum("v_c").alias("sum_u"),
         )
     )
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_senr_")
-    feed_dir = os.path.join(tmp, "feed")
-    os.makedirs(feed_dir)
     parts = _time_chunked(e, "ts")
-    qname = "senr_" + uuid.uuid4().hex[:8]
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{feed_dir}/*")
-    ).withColumn("v_c", cents("value"))
-    enriched = static_enrich(stream, profile, "user_id", how="inner")
-    spikes = enriched.filter(
-        F.col("v_c") * F.col("n_u") > F.lit(2) * F.col("sum_u")
-    ).select("user_id", "event_id")
-    q = (
-        spikes.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
+    rounds = [(parts.filter(F.col("__t__") == b).select(*e.columns),) for b in (1, 2, 3)]
+    out = _drive_stream_epochs(
+        spark, rounds, "append", "senr_",
+        build=lambda s: static_enrich(
+            s.withColumn("v_c", cents("value")), profile, "user_id", how="inner"
+        )
+        .filter(F.col("v_c") * F.col("n_u") > F.lit(2) * F.col("sum_u"))
+        .select("user_id", "event_id"),
     )
-    try:
-        for b in (1, 2, 3):
-            parts.filter(F.col("__t__") == b).select(*e.columns).coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(feed_dir, f"b{b}"))
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)  # memory sink holds the rows driver-side
-    return (
-        spark.table(qname)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_spikes"))
-    )
+    return out.groupBy("user_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_spikes"))
 
 
 ORACLE_STREAMING_ENRICH = f"""
@@ -8691,72 +8216,28 @@ def q_streaming_outer_join(spark, sf_dir):
     total output must then equal the batch left join. Even-id events =
     left, odd = right, matched within [ts, ts+30min] per user. Output:
     per-user matched-pair and no-match-row counts."""
-    import os
-    import uuid
     from datetime import timedelta
 
     from storm_spark.streaming.joins import interval_join
 
     e = _events(spark, sf_dir).select("user_id", "ts", "event_id")
     max_ts = e.agg(F.max("ts")).collect()[0][0]  # 1-row driver fetch
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_soj_")
-    left_dir = os.path.join(tmp, "left")
-    right_dir = os.path.join(tmp, "right")
-    os.makedirs(left_dir)
-    os.makedirs(right_dir)
-    parts = _time_chunked(e, "ts")
-    qname = "soj_" + uuid.uuid4().hex[:8]
-    left = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{left_dir}/*")
-    ).withWatermark("ts", "1 second")
-    right = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{right_dir}/*")
-    ).withWatermark("ts", "1 second")
-    joined = interval_join(
-        left, right, "user_id", "ts",
-        lower_seconds=0, upper_seconds=1800, how="left_outer",
-    ).select("user_id", "event_id", F.col("event_id_r"))
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
+    rounds = _parity_rounds(e)
+    # two sentinel rounds: the first advances the watermark past every
+    # real row, the second gives the join a batch in which to FLUSH
+    # the now-expired unmatched left rows
+    for s in (1, 2):
+        sent = spark.createDataFrame([(-1, max_ts + timedelta(days=s), -s)], e.schema)
+        rounds.append((sent, sent))
+    out = _drive_stream_epochs(
+        spark, rounds, "append", "soj_",
+        build=lambda left, right: interval_join(
+            left.withWatermark("ts", "1 second"), right.withWatermark("ts", "1 second"),
+            "user_id", "ts", lower_seconds=0, upper_seconds=1800, how="left_outer",
+        ).select("user_id", "event_id", F.col("event_id_r")),
     )
-    try:
-        for b in (1, 2, 3):
-            tb = parts.filter(F.col("__t__") == b)
-            tb.filter(F.col("event_id") % 2 == 0).select(*e.columns).coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(left_dir, f"b{b}"))
-            tb.filter(F.col("event_id") % 2 == 1).select(*e.columns).coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(right_dir, f"b{b}"))
-            q.processAllAvailable()
-        # two sentinel rounds: the first advances the watermark past every
-        # real row, the second gives the join a batch in which to FLUSH
-        # the now-expired unmatched left rows
-        for s in (1, 2):
-            sent = spark.createDataFrame(
-                [(-1, max_ts + timedelta(days=s), -s)], e.schema
-            )
-            sent.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(left_dir, f"s{s}")
-            )
-            sent.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(right_dir, f"s{s}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
     return (
-        spark.table(qname)
-        .filter(F.col("user_id") >= 0)
+        out.filter(F.col("user_id") >= 0)
         .groupBy("user_id")
         .agg(
             F.count("event_id_r").cast("bigint").alias("n_pairs"),
@@ -8794,70 +8275,26 @@ def q_streaming_full_outer_join(spark, sf_dir):
     exercises). Same split/interval as the left-outer gate; output adds
     the right-only count per user, keyed on the COALESCED user id since a
     right-only row carries it in the right-side column."""
-    import os
-    import uuid
     from datetime import timedelta
 
     from storm_spark.streaming.joins import interval_join
 
     e = _events(spark, sf_dir).select("user_id", "ts", "event_id")
     max_ts = e.agg(F.max("ts")).collect()[0][0]  # 1-row driver fetch
-    tmp = gate_tmp.mkdtemp(prefix="storm_spark_sfoj_")
-    left_dir = os.path.join(tmp, "left")
-    right_dir = os.path.join(tmp, "right")
-    os.makedirs(left_dir)
-    os.makedirs(right_dir)
-    parts = _time_chunked(e, "ts")
-    qname = "sfoj_" + uuid.uuid4().hex[:8]
-    left = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{left_dir}/*")
-    ).withWatermark("ts", "1 second")
-    right = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{right_dir}/*")
-    ).withWatermark("ts", "1 second")
-    joined = interval_join(
-        left, right, "user_id", "ts",
-        lower_seconds=0, upper_seconds=1800, how="full_outer",
-    ).select("user_id", "event_id", F.col("user_id_r"), F.col("event_id_r"))
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .start()
+    rounds = _parity_rounds(e)
+    for s in (1, 2):
+        sent = spark.createDataFrame([(-1, max_ts + timedelta(days=s), -s)], e.schema)
+        rounds.append((sent, sent))
+    out = _drive_stream_epochs(
+        spark, rounds, "append", "sfoj_",
+        build=lambda left, right: interval_join(
+            left.withWatermark("ts", "1 second"), right.withWatermark("ts", "1 second"),
+            "user_id", "ts", lower_seconds=0, upper_seconds=1800, how="full_outer",
+        ).select("user_id", "event_id", F.col("user_id_r"), F.col("event_id_r")),
     )
-    try:
-        for b in (1, 2, 3):
-            tb = parts.filter(F.col("__t__") == b)
-            tb.filter(F.col("event_id") % 2 == 0).select(*e.columns).coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(left_dir, f"b{b}"))
-            tb.filter(F.col("event_id") % 2 == 1).select(*e.columns).coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(right_dir, f"b{b}"))
-            q.processAllAvailable()
-        for s in (1, 2):
-            sent = spark.createDataFrame(
-                [(-1, max_ts + timedelta(days=s), -s)], e.schema
-            )
-            sent.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(left_dir, f"s{s}")
-            )
-            sent.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(right_dir, f"s{s}")
-            )
-            q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
     uid = F.coalesce(F.col("user_id"), F.col("user_id_r"))
     return (
-        spark.table(qname)
-        .filter(uid >= 0)
+        out.filter(uid >= 0)
         .groupBy(uid.alias("user_id"))
         .agg(
             F.sum(

@@ -26,6 +26,22 @@ def code_cache_opt() -> str:
     return f"-XX:ReservedCodeCacheSize={size}"
 
 
+def driver_memory_default() -> str:
+    """Driver heap when ``get_spark`` is given none: ``$SPARK_GRAFT_DRIVER_MEM``
+    when set and not blank, else half of the host's physical memory, at
+    most 32g. A fixed 32g heap on a smaller host lets the JVM grow until
+    the kernel kills it mid-run, and every later query then fails with
+    "Connection refused" instead of a memory error."""
+    env = (os.environ.get("SPARK_GRAFT_DRIVER_MEM") or "").strip()
+    if env:
+        return env
+    try:
+        host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError):  # no sysconf names on this platform
+        return "32g"
+    return f"{min(32 * 1024, host_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "storm_spark",
     cpus: int | None = None,
@@ -41,7 +57,7 @@ def get_spark(
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     shuffle_partitions = shuffle_partitions or cpus
-    driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    driver_memory = driver_memory or driver_memory_default()
     # JIT code cache: the JVM default (240 MB) is sized for short-lived
     # applications. A long-lived session that plans hundreds of distinct
     # queries loads thousands of whole-stage-codegen classes; once the cache

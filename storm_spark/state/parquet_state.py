@@ -87,6 +87,11 @@ class ParquetMapState(MapState):
         self.num_buckets = num_buckets
         self._cur_txid: int | None = None
         self._pending: dict[str, int] | None = None
+        # schema of the stored columns: recorded by the merge that writes
+        # them, or inferred once from state this instance did not write.
+        # The declared key schema can differ (an untyped FeederSource
+        # declares string fields that arrive as bigint).
+        self._stored_schema: StructType | None = None
         os.makedirs(self._data_dir(), exist_ok=True)
 
     @classmethod
@@ -168,11 +173,19 @@ class ParquetMapState(MapState):
             return self.spark.createDataFrame([], self._full_schema())
         # recursiveFileLookup disables partition discovery — the bucket id is
         # derivable from the keys, so the partition column isn't needed and
-        # mixed-sequence dir lists would otherwise conflict
+        # mixed-sequence dir lists would otherwise conflict. A known schema
+        # spares a Spark schema-inference job on every merge and every read.
+        if self._stored_schema is None:
+            self._stored_schema = (
+                self.spark.read.option("recursiveFileLookup", "true")
+                .parquet(*dirs)
+                .select(*self.key_names, CURR, PREV, TXID)
+                .schema
+            )
         return (
             self.spark.read.option("recursiveFileLookup", "true")
+            .schema(self._stored_schema)
             .parquet(*dirs)
-            .select(*self.key_names, CURR, PREV, TXID)
         )
 
     # -- lifecycle ---------------------------------------------------------
@@ -291,6 +304,7 @@ class ParquetMapState(MapState):
             .partitionBy(BUCKET)
             .parquet(self._seq_dir(seq))
         )
+        self._stored_schema = StructType([f for f in out.schema.fields if f.name != BUCKET])
         pending = dict(manifest)
         for bkt in touched:
             pending[str(bkt)] = seq

@@ -94,3 +94,23 @@ def test_entry_contract_importable():
     qs, os_ = mod.queries(), mod.oracle_sql()
     assert len(qs) >= 138 and set(os_) <= set(qs)
     assert callable(mod.entry)
+
+
+def test_streams_are_built_by_the_one_driver():
+    """Every catalog stream goes through ``_drive_stream_epochs`` (the one
+    write-then-drain scaffold); only ``q_streaming_recovery``, which stops,
+    tampers with and restarts its query, builds its own ``readStream``.
+    AST scan, so a new hand-rolled copy fails here before it lands."""
+    import ast
+
+    import storm_spark.queries as Q
+
+    with open(Q.__file__) as f:
+        tree = ast.parse(f.read())
+    owners = {
+        getattr(node, "name", type(node).__name__)
+        for node in tree.body
+        if any(isinstance(n, ast.Attribute) and n.attr == "readStream" for n in ast.walk(node))
+    }
+    assert "_drive_stream_epochs" in owners
+    assert owners <= {"_drive_stream_epochs", "q_streaming_recovery"}, owners

@@ -223,6 +223,42 @@ def test_parquet_multi_get(spark, tmp_path):
     assert st.multi_get([("x",), ("nope",), ("y",)]) == [5, None, 6]
 
 
+def test_parquet_read_runs_no_schema_job(spark, tmp_path):
+    """The state's bucket scan carries the known state schema, so building
+    ``dataframe()`` after a commit starts no Spark job (no schema
+    inference) — each DRPC state_query, as_dict and merge reads this way."""
+    st = ParquetMapState(
+        spark, str(tmp_path / "s6"), _key_schema(), "count", "bigint", StateType.OPAQUE, 4
+    )
+    st.begin_commit(1)
+    st.update_from_agg(_batch(spark, [("x", 5), ("y", 6)]), Count(), 1)
+    st.commit(1)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    df = st.dataframe(spark)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert sorted(map(tuple, df.collect())) == [("x", 5), ("y", 6)]
+    assert st.multi_get([("y",), ("x",)]) == [6, 5]
+
+
+def test_parquet_read_follows_stored_key_type(spark, tmp_path):
+    """An untyped FeederSource declares string key fields while its rows
+    carry bigint keys: the state reads back the type the merge stored, in
+    the writing instance and in a fresh one over the same directory."""
+    path = str(tmp_path / "s7")
+    batch = spark.createDataFrame([(1, 5), (2, 6)], "k bigint, __delta__ bigint")
+    st = ParquetMapState(spark, path, _key_schema(), "count", "bigint", StateType.OPAQUE, 4)
+    st.begin_commit(1)
+    st.update_from_agg(batch, Count(), 1)
+    st.commit(1)
+    st.begin_commit(2)
+    st.update_from_agg(batch.limit(1), Count(), 2)
+    st.commit(2)
+    fresh = ParquetMapState(spark, path, _key_schema(), "count", "bigint", StateType.OPAQUE, 4)
+    for s in (st, fresh):
+        assert s.as_dict() == {(1,): 10, (2,): 6}
+
+
 def test_parquet_incremental_bucket_rewrite(spark, tmp_path):
     """The scale property: an epoch touching one key rewrites ONLY that key's
     bucket — untouched buckets carry forward by manifest reference."""
